@@ -46,9 +46,20 @@ object GraftSession {
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "1000000")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      // Compiled-class cache. Spark's default of 100 entries is split
+      // into 4 LRU segments of 25, and which segment a class lands in
+      // depends on an identity hash that changes from JVM to JVM. One
+      // medallion cycle uses ~70 classes: in some JVMs a segment overflows
+      // and then recompiles (Janino + class load + JIT) 10-30 classes
+      // every cycle, in others none, so the same run costs a different
+      // amount from one JVM to the next.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.ui.enabled", "false")
 
-  def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
+  /** A local session on `cores` threads: `SPARK_GRAFT_CPUS` when set, else
+    * the host's available processors. */
+  def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)): SparkSession = {
     val spark = builder(cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

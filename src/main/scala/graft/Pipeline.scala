@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
 import graft.analytics.GoldAnalytics
 import graft.etl.BronzeToSilver
 import graft.sources.{Landing, Sinks, Sources}
@@ -27,14 +28,22 @@ final class Pipeline(spark: SparkSession, warehouseDir: String) {
     Landing.markRead(landingDir)
   }
 
-  /** Silver→Gold: latest-snapshot dedup once (cached), then the four
-    * analyses, each dual-written (history append + current overwrite). */
-  def silverToGold(analysisTs: String): Unit = {
+  /** Silver→Gold over one cached single-partition per-asset snapshot
+    * ([[GoldAnalytics.latestSnapshot]]): the four analyses, each
+    * dual-written (history append + current overwrite). Gold writes are
+    * exchange-free — their sorts, top-10, the dominance `sum` and the
+    * write run in one task each — so a write is one job, not a
+    * range-sample + shuffle-map + write triple.
+    *
+    * Returns the Silver row count, the reference's `count()` log line
+    * (3-spark…py:54). It comes from an [[Observation]] on the full-history
+    * scan that `top_gainers_losers` runs anyway, not from a separate
+    * action; the fail-fast on a missing table is the read's. */
+  def silverToGold(analysisTs: String): Long = {
     val silver = spark.read.parquet(s"$warehouseDir/silver/assats_list")
-    silver.count()   // reference's only data-quality check (3-spark…py:54)
-
-    val history = silver.withColumn("data_referencia_dt",
-      org.apache.spark.sql.functions.col("data_referencia").cast("timestamp"))
+    val silverRows = Observation("silver_rows")
+    val history = silver.observe(silverRows, count(lit(1)).as("rows"))
+      .withColumn("data_referencia_dt", col("data_referencia").cast("timestamp"))
     val latest = GoldAnalytics.latestSnapshot(silver).cache()
 
     def write(df: DataFrame, name: String): Unit =
@@ -47,6 +56,8 @@ final class Pipeline(spark: SparkSession, warehouseDir: String) {
       .foreach(write(_, "market_dominance"))   // skip guard: total null/≤0
     write(GoldAnalytics.supplyDynamics(latest, analysisTs), "supply_dynamics")
     latest.unpersist()
+    // the top_gainers_losers writes ran the observed scan: get() is set
+    silverRows.get("rows").asInstanceOf[Long]
   }
 
   /** Full run: ingest fixture polls → validate → Silver → Gold → dashboard. */

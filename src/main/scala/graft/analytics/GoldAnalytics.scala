@@ -1,7 +1,8 @@
 package graft.analytics
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.CodegenFunctions.stableLiteral
 import graft.model.Schemas
 import graft.operators.LatestSnapshot
 
@@ -10,18 +11,32 @@ import graft.operators.LatestSnapshot
  * surface (3-spark_curated_analytics_full.py:114-266;
  * 5-sql_exportacao_de_dados_dashboard.sql). Input: Silver `assats_list`.
  *
- * All transforms share one cached latest-snapshot plan (the reference
- * recomputes the scan+window lineage for every one of ~9 actions — SURVEY
- * §4.4 — caching preserves semantics and removes the 8× recompute).
+ * All transforms share one cached single-partition per-asset snapshot
+ * (the reference recomputes the scan+window lineage for every one of ~9
+ * actions — SURVEY §4.4 — caching preserves semantics and removes the 8×
+ * recompute). Gold writes are exchange-free: a single-partition child
+ * already satisfies every ordered and all-tuples distribution, so each
+ * `orderBy`, top-10, `sum` and write below plans with no Exchange and runs
+ * in one task (`PlanShapeSpec` pins this).
  */
 object GoldAnalytics {
 
+  /** The `data_processamento_analise` audit stamp. It changes every
+    * cycle, so it goes through `stable_literal`: the analyses' generated
+    * code stays the same from one cycle to the next. */
+  private def auditTs(analysisTs: String): Column =
+    stableLiteral(lit(analysisTs).cast("timestamp"))
+
   /** Common prep: typed timestamp + latest snapshot per asset
-    * (3-spark…py:62-74). */
+    * (3-spark…py:62-74), in one partition. The window keeps its parallel
+    * hash exchange and map-side `WindowGroupLimit`; only its ≤|assets|
+    * result rows move into the single partition. `repartition(1)`, not
+    * `coalesce(1)`: coalesce would pull the window itself into one task,
+    * which at history scale serializes the whole dedup. */
   def latestSnapshot(silver: DataFrame): DataFrame = {
     val withTs = silver.withColumn("data_referencia_dt",
       col("data_referencia").cast("timestamp"))
-    LatestSnapshot(withTs, Seq("id"), col("data_referencia_dt"))
+    LatestSnapshot(withTs, Seq("id"), col("data_referencia_dt")).repartition(1)
   }
 
   /** Q1 `daily_overview` (3-spark…py:114-151): latest snapshot, rounded
@@ -39,7 +54,7 @@ object GoldAnalytics {
       col("explorer"),
       col("data_referencia_dt").as("data_referencia"))
     .orderBy(col("rank").asc)
-    .withColumn("data_processamento_analise", lit(analysisTs).cast("timestamp"))
+    .withColumn("data_processamento_analise", auditTs(analysisTs))
 
   /**
    * Q2 `top_gainers_losers` (3-spark…py:153-196): top-10 gainers from the
@@ -67,7 +82,7 @@ object GoldAnalytics {
         .orderBy(col("change_percent_24hr").asc).limit(10), Schemas.Loser)
 
     gainers.union(losers)   // positional, duplicates kept (unionAll parity)
-      .withColumn("data_processamento_analise", lit(analysisTs).cast("timestamp"))
+      .withColumn("data_processamento_analise", auditTs(analysisTs))
   }
 
   /**
@@ -83,14 +98,14 @@ object GoldAnalytics {
     total.filter(_ > 0).map { t =>
       latest.filter(col("market_cap_usd").isNotNull)
         .withColumn("percent_market_cap",
-          round(col("market_cap_usd") / lit(t) * 100, 4))
+          round(col("market_cap_usd") / stableLiteral(lit(t)) * 100, 4))
         .select(
           col("name"), col("symbol"),
           round(col("market_cap_usd"), 2).as("market_cap_usd"),
           col("percent_market_cap"),
           col("data_referencia_dt").as("data_referencia"))
         .orderBy(col("percent_market_cap").desc)
-        .withColumn("data_processamento_analise", lit(analysisTs).cast("timestamp"))
+        .withColumn("data_processamento_analise", auditTs(analysisTs))
     }
   }
 
@@ -115,13 +130,18 @@ object GoldAnalytics {
         col("market_cap_per_unit_supply"), col("status_oferta_maxima"),
         col("data_referencia_dt").as("data_referencia"))
       .orderBy(col("market_cap_per_unit_supply").desc)
-      .withColumn("data_processamento_analise", lit(analysisTs).cast("timestamp"))
+      .withColumn("data_processamento_analise", auditTs(analysisTs))
 
   /**
    * Q5 dashboard master (5-sql_exportacao_de_dados_dashboard.sql:1-50):
    * 3-way LEFT JOIN of the Gold tables on (symbol, data_referencia), filtered
-   * to the latest data_referencia via an uncorrelated scalar subquery,
-   * ordered by rank. Runs over the registered "current" views. The Gold
+   * to the latest data_referencia, ordered by rank. The reference filters
+   * with `WHERE overview.data_referencia = (SELECT MAX(...))`; here the
+   * overview joins the one-row MAX instead. The rows are the same (the
+   * filter reads only overview columns, and LEFT JOINs keep every overview
+   * row), but Spark inlines a scalar subquery's result into generated code,
+   * which made every cycle's dashboard compile fresh classes; a join key is
+   * data. Runs over the registered "current" views. The Gold
    * tables are small (≤ ~100 rows) → Catalyst broadcasts every join side;
    * the fan-out on non-unique `symbol` is reference behavior, kept as-is.
    */
@@ -134,6 +154,8 @@ object GoldAnalytics {
       |  supply.market_cap_per_unit_supply, supply.status_oferta_maxima,
       |  dominance.percent_market_cap, movers.tipo_movimento
       |FROM daily_overview AS overview
+      |JOIN (SELECT MAX(data_referencia) AS latest_ref FROM daily_overview) AS latest
+      |  ON overview.data_referencia = latest.latest_ref
       |LEFT JOIN supply_dynamics AS supply
       |  ON overview.symbol = supply.symbol
       | AND overview.data_referencia = supply.data_referencia
@@ -143,8 +165,6 @@ object GoldAnalytics {
       |LEFT JOIN top_gainers_losers AS movers
       |  ON overview.symbol = movers.symbol
       | AND overview.data_referencia = movers.data_referencia
-      |WHERE overview.data_referencia =
-      |  (SELECT MAX(data_referencia) FROM daily_overview)
       |ORDER BY overview.rank ASC
       |""".stripMargin
 

@@ -33,6 +33,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("l2_sq"),
       info("l2_sq", "l2_sq(a, b) - squared Euclidean distance of two float/double vectors"),
       (children: Seq[Expression]) => L2Sq(children(0), children(1))))
+    ext.injectFunction((
+      FunctionIdentifier("stable_literal"),
+      new ExpressionInfo(classOf[StableLiteral].getName, null, "stable_literal",
+        "stable_literal(c) - the constant c, kept out of generated code", ""),
+      (children: Seq[Expression]) => StableLiteral(children(0))))
     // Spark's internal bounded-priority-queue top-k collector (the
     // engine behind pandas-API nsmallest/nlargest), surfaced as a SQL
     // function: exact per-group top-k with O(k) state — map-side
@@ -53,6 +58,11 @@ object VectorFunctions {
   def cosineSim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
   def dotProduct(a: Column, b: Column): Column = call_function("dot_product", a, b)
   def l2Sq(a: Column, b: Column): Column = call_function("l2_sq", a, b)
+}
+
+/** Column-API entry point for [[StableLiteral]]. */
+object CodegenFunctions {
+  def stableLiteral(c: Column): Column = call_function("stable_literal", c)
 }
 
 /** Column-API entry points for the registered string functions. */

@@ -56,32 +56,6 @@ object TextDedup {
   private def md5Word32(salt: String, input: Column): Column =
     conv(substring(md5(concat(lit(salt), input)), 1, 8), 16, 10).cast(LongType)
 
-  /** MinHash signatures in long form: (docId, i, sig) for i in 0..k-1.
-    * The k permutations are derived from TWO md5 words per shingle via the
-    * Kirsch–Mitzenmacher construction g_i = (h1 + i·h2) mod 2³² — one md5
-    * costs ~50× an integer multiply-add, so hashing drops from k to 2
-    * digests per shingle with the same (pairwise-independent) LSH
-    * guarantees. Both h-words and the mod arithmetic are engine-portable:
-    * the DuckDB oracle reproduces every signature exactly. */
-  def minHashSignatures(sh: DataFrame, idCol: String, k: Int): DataFrame =
-    sh.select(col(idCol),
-        md5Word32("a_", col("s")).as("h1"), md5Word32("b_", col("s")).as("h2"))
-      .select(col(idCol), explode(sequence(lit(0), lit(k - 1))).as("i"),
-        col("h1"), col("h2"))
-      .select(col(idCol), col("i"),
-        ((col("h1") + col("i") * col("h2")) % 4294967296L).as("g"))
-      .groupBy(col(idCol), col("i"))
-      .agg(min(col("g")).as("sig"))
-
-  /** LSH band hashes: (docId, band, bh) where band = i / r and bh hashes the
-    * band's r signature values in i order. */
-  def lshBands(sigs: DataFrame, idCol: String, r: Int): DataFrame =
-    sigs.withColumn("band", (col("i") / r).cast(IntegerType))
-      .groupBy(col(idCol), col("band"))
-      .agg(md5(concat_ws(",",
-        transform(array_sort(collect_list(struct(col("i"), col("sig")))),
-          x => x.getField("sig").cast(StringType)))).as("bh"))
-
   /** Candidate pairs (d1 < d2) sharing at least one LSH band.
     *
     * `maxBucket` is the HOT-BUCKET policy (the r16 verdict's top task —
@@ -211,9 +185,14 @@ object TextDedup {
     jaccardFromInter(candidateIntersections(sh, idCol, pairs), sh, idCol)
 
   /** Wide MinHash signatures: one row per doc with sig_0..sig_{k-1} —
-    * k `min` aggregates over the K-M permutations in a SINGLE groupBy
-    * (one shuffle of |shingle| rows, no ×k explode; identical values to
-    * the long form / oracle). */
+    * k `min` aggregates in a SINGLE groupBy (one shuffle of |shingle|
+    * rows, no ×k explode). The k permutations are derived from TWO md5
+    * words per shingle via the Kirsch–Mitzenmacher construction
+    * g_i = (h1 + i·h2) mod 2³² — one md5 costs ~50× an integer
+    * multiply-add, so hashing drops from k to 2 digests per shingle with
+    * the same (pairwise-independent) LSH guarantees. Both h-words and the
+    * mod arithmetic are engine-portable: the DuckDB oracle reproduces
+    * every signature exactly. */
   def minHashSignaturesWide(sh: DataFrame, idCol: String, k: Int): DataFrame = {
     val withH = sh.select(col(idCol),
       md5Word32("a_", col("s")).as("h1"), md5Word32("b_", col("s")).as("h2"))

@@ -108,11 +108,13 @@ object Sinks {
       .format(resolveFormat(spark, path)).load(path)
 
   /** S8: overwrite-mode "current" sink, registered as a temp view so the
-    * dashboard SQL (§2.8 Q5) can address it by name, like BigQuery does. */
+    * dashboard SQL (§2.8 Q5) can address it by name, like BigQuery does.
+    * The view reads the just-written files with the schema they were
+    * written with, so no Parquet footer-inference job runs. */
   def overwriteCurrent(df: DataFrame, path: String, table: String,
                        spark: SparkSession): Unit = {
     df.write.mode(SaveMode.Overwrite).parquet(path)
-    spark.read.parquet(path).createOrReplaceTempView(table)
+    spark.read.schema(df.schema).parquet(path).createOrReplaceTempView(table)
   }
 
   /** S9: one analysis → both sinks. Caller is expected to have cached the

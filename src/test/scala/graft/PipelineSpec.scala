@@ -6,41 +6,7 @@ import graft.sources.{Landing, Sinks}
 /** End-to-end medallion pipeline over CoinCap-shaped fixture polls:
   * Bronze JSON → Silver → four Gold analyses → dashboard SQL. */
 class PipelineSpec extends SparkSpec {
-
-  /** Two-poll fixture: btc/eth/cap at t0, updated btc/eth at t1 (later).
-    * cap has supply ≥ maxSupply; eth has null maxSupply; nul has null
-    * changePercent and null marketCap. */
-  private def asset(id: String, rank: Int, symbol: String, name: String,
-                    supply: String, maxSupply: String, mcap: String,
-                    vol: String, price: String, change: String,
-                    vwap: String): String =
-    s"""{"id":"$id","rank":"$rank","symbol":"$symbol","name":"$name",
-       |"supply":$supply,"maxSupply":$maxSupply,"marketCapUsd":$mcap,
-       |"volumeUsd24Hr":$vol,"priceUsd":$price,"changePercent24Hr":$change,
-       |"vwap24Hr":$vwap,"explorer":"https://x/$id",
-       |"tokens":{"1":["0xabc"]}}""".stripMargin.replaceAll("\n", "")
-
-  private def poll(ts: Long, assets: Seq[String]): String =
-    s"""{"data":[${assets.mkString(",")}],"timestamp":$ts}"""
-
-  private val t0 = 1748056129137L // 2025-05-24T03:08:49 UTC
-  private val t1 = t0 + 3600000L
-
-  private val poll0 = poll(t0, Seq(
-    asset("bitcoin", 1, "BTC", "Bitcoin", "\"19868975.0\"", "\"21000000.0\"",
-      "\"2145599312004.7\"", "\"19301351533.2\"", "\"107987.6\"", "\"-2.5\"", "\"108240.5\""),
-    asset("ethereum", 2, "ETH", "Ethereum", "\"120716917.5\"", "null",
-      "\"305875616817.2\"", "\"9014715590.5\"", "\"2533.8\"", "\"1.2\"", "\"2539.8\""),
-    asset("capped", 3, "CAP", "Capped", "\"1000.0\"", "\"1000.0\"",
-      "\"500.0\"", "\"10.0\"", "\"0.5\"", "\"-9.9\"", "\"0.5\""),
-    asset("nully", 4, "NUL", "Nully", "\"10.0\"", "null",
-      "null", "\"1.0\"", "\"1.0\"", "null", "\"1.0\"")))
-
-  private val poll1 = poll(t1, Seq(
-    asset("bitcoin", 1, "BTC", "Bitcoin", "\"19868975.0\"", "\"21000000.0\"",
-      "\"2150000000000.0\"", "\"19301351533.2\"", "\"108200.0\"", "\"3.3\"", "\"108240.5\""),
-    asset("ethereum", 2, "ETH", "Ethereum", "\"120716917.5\"", "null",
-      "\"306000000000.0\"", "\"9014715590.5\"", "\"2540.0\"", "\"-0.7\"", "\"2539.8\"")))
+  import PipelineSpec._
 
   test("bronze → silver → gold → dashboard end to end") {
     val landing = tmpDir("landing")
@@ -95,6 +61,39 @@ class PipelineSpec extends SparkSpec {
     assert(rows.length >= 4)
     assert(rows.head.getAs[String]("id") === "bitcoin")
     assert(rows.head.getAs[String]("status_oferta_maxima") === "Disponível")
+  }
+
+  test("silver→gold: current tables in order key, history = current, dashboard pinned") {
+    val warehouse = tmpDir("warehouse_sem")
+    val pipeline = silverFromTwoPolls(spark, tmpDir("landing_sem"), warehouse)
+    assert(pipeline.silverToGold("2025-05-24 05:00:00") === 6L,
+      "silverToGold reports the Silver rows its observed scan counted")
+
+    def gold(name: String) = spark.read.parquet(s"$warehouse/gold/$name")
+    // each current table reads back in its order key
+    for ((name, key, desc) <- Seq(("daily_overview", "rank", false),
+        ("market_dominance", "percent_market_cap", true),
+        ("supply_dynamics", "market_cap_per_unit_supply", true))) {
+      val got = gold(name).select(key).collect()
+        .map(_.get(0).asInstanceOf[Number].doubleValue).toSeq
+      assert(got.size >= 3 && got == (if (desc) got.sorted.reverse else got.sorted),
+        s"$name does not read back in $key order: $got")
+    }
+    // one run: each history append holds exactly its current table's rows;
+    // each "current" view has the schema its files would infer
+    for (name <- Seq("daily_overview", "top_gainers_losers",
+        "market_dominance", "supply_dynamics")) {
+      assert(gold(s"${name}_history").collect().map(_.toString).sorted.toSeq ==
+        gold(name).collect().map(_.toString).sorted.toSeq, s"$name history")
+      assert(spark.table(name).schema == gold(name).schema, s"$name view schema")
+    }
+    // the dashboard's rows on this fixture (order within a rank is free:
+    // the movers join fans BTC out to its gainer and loser rows); the
+    // timestamp is rendered in the session zone, not the JVM's
+    val dash = graft.analytics.GoldAnalytics.dashboard(spark)
+      .withColumn("data_referencia", col("data_referencia").cast("string"))
+      .collect().map(_.toString).sorted.toSeq
+    assert(dash == DashboardRows, dash.mkString("\n"))
   }
 
   test("market dominance skip guard: all-null market caps → analysis skipped") {
@@ -167,5 +166,69 @@ class PipelineSpec extends SparkSpec {
         "verified down to the probe, exercised on clusters that ship " +
         "delta-spark")
     }
+  }
+}
+
+/** The two-poll fixture, shared with the plan-shape receipts. */
+object PipelineSpec {
+
+  /** Two-poll fixture: btc/eth/cap at t0, updated btc/eth at t1 (later).
+    * cap has supply ≥ maxSupply; eth has null maxSupply; nul has null
+    * changePercent and null marketCap. */
+  def asset(id: String, rank: Int, symbol: String, name: String,
+            supply: String, maxSupply: String, mcap: String,
+            vol: String, price: String, change: String,
+            vwap: String): String =
+    s"""{"id":"$id","rank":"$rank","symbol":"$symbol","name":"$name",
+       |"supply":$supply,"maxSupply":$maxSupply,"marketCapUsd":$mcap,
+       |"volumeUsd24Hr":$vol,"priceUsd":$price,"changePercent24Hr":$change,
+       |"vwap24Hr":$vwap,"explorer":"https://x/$id",
+       |"tokens":{"1":["0xabc"]}}""".stripMargin.replaceAll("\n", "")
+
+  def poll(ts: Long, assets: Seq[String]): String =
+    s"""{"data":[${assets.mkString(",")}],"timestamp":$ts}"""
+
+  val t0 = 1748056129137L // 2025-05-24T03:08:49 UTC
+  val t1: Long = t0 + 3600000L
+
+  val poll0: String = poll(t0, Seq(
+    asset("bitcoin", 1, "BTC", "Bitcoin", "\"19868975.0\"", "\"21000000.0\"",
+      "\"2145599312004.7\"", "\"19301351533.2\"", "\"107987.6\"", "\"-2.5\"", "\"108240.5\""),
+    asset("ethereum", 2, "ETH", "Ethereum", "\"120716917.5\"", "null",
+      "\"305875616817.2\"", "\"9014715590.5\"", "\"2533.8\"", "\"1.2\"", "\"2539.8\""),
+    asset("capped", 3, "CAP", "Capped", "\"1000.0\"", "\"1000.0\"",
+      "\"500.0\"", "\"10.0\"", "\"0.5\"", "\"-9.9\"", "\"0.5\""),
+    asset("nully", 4, "NUL", "Nully", "\"10.0\"", "null",
+      "null", "\"1.0\"", "\"1.0\"", "null", "\"1.0\"")))
+
+  val poll1: String = poll(t1, Seq(
+    asset("bitcoin", 1, "BTC", "Bitcoin", "\"19868975.0\"", "\"21000000.0\"",
+      "\"2150000000000.0\"", "\"19301351533.2\"", "\"108200.0\"", "\"3.3\"", "\"108240.5\""),
+    asset("ethereum", 2, "ETH", "Ethereum", "\"120716917.5\"", "null",
+      "\"306000000000.0\"", "\"9014715590.5\"", "\"2540.0\"", "\"-0.7\"", "\"2539.8\"")))
+
+  /** The dashboard on the two-poll fixture, as sorted `Row.toString`s. */
+  val DashboardRows: Seq[String] = Seq(
+    "[bitcoin,Bitcoin,BTC,1,108200.0,2.15E12,1.93013515332E10,3.3,108240.5," +
+      "1.9868975E7,2.1E7,https://x/bitcoin,2025-05-24 04:08:49," +
+      "108208.90357958,Disponível,87.5407,Ganhador]",
+    "[bitcoin,Bitcoin,BTC,1,108200.0,2.15E12,1.93013515332E10,3.3,108240.5," +
+      "1.9868975E7,2.1E7,https://x/bitcoin,2025-05-24 04:08:49," +
+      "108208.90357958,Disponível,87.5407,Perdedor]",
+    "[ethereum,Ethereum,ETH,2,2540.0,3.06E11,9.0147155905E9,-0.7,2539.8," +
+      "1.20716918E8,null,https://x/ethereum,2025-05-24 04:08:49," +
+      "2534.85597824,Não Definido,12.4593,Ganhador]",
+    "[ethereum,Ethereum,ETH,2,2540.0,3.06E11,9.0147155905E9,-0.7,2539.8," +
+      "1.20716918E8,null,https://x/ethereum,2025-05-24 04:08:49," +
+      "2534.85597824,Não Definido,12.4593,Perdedor]")
+
+  /** Lands both polls in `landing` and runs Bronze→Silver into `warehouse`. */
+  def silverFromTwoPolls(spark: org.apache.spark.sql.SparkSession,
+                         landing: String, warehouse: String): Pipeline = {
+    Landing.injectPoll(landing, poll0, t0)
+    Landing.injectPoll(landing, poll1, t1)
+    val pipeline = new Pipeline(spark, warehouse)
+    pipeline.bronzeToSilver(landing, "2025-05-24 05:00:00")
+    pipeline
   }
 }

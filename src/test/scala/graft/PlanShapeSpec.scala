@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.LatestSnapshot
 import graft.queries.CoreQueries
+import graft.sources.Landing
 
 /**
  * Physical-plan shape assertions — the 100 TB posture checks. These pin the
@@ -17,6 +18,20 @@ class PlanShapeSpec extends SparkSpec {
 
   private def physicalPlan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  /** Every node of an executed plan, through AQE wrappers and query
+    * stages. A cached relation is a leaf: its build plan is not walked. */
+  private def planNodes(
+      p: org.apache.spark.sql.execution.SparkPlan
+  ): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{
+      AdaptiveSparkPlanExec, QueryStageExec}
+    p +: (p match {
+      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+      case s: QueryStageExec => planNodes(s.plan)
+      case _ => p.children.flatMap(planNodes)
+    })
+  }
 
   test("latest-snapshot dedup compiles to WindowGroupLimit (pre-shuffle top-1)") {
     val df = Seq(("a", 1, "x"), ("a", 2, "y")).toDF("id", "v", "p")
@@ -1145,12 +1160,6 @@ class PlanShapeSpec extends SparkSpec {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{
       AdaptiveSparkPlanExec, QueryStageExec}
-    def expand(p: SparkPlan): Seq[SparkPlan] =
-      p.collect { case n => n }.flatMap {
-        case a: AdaptiveSparkPlanExec => expand(a.executedPlan)
-        case s: QueryStageExec => expand(s.plan)
-        case n => Seq(n)
-      }
     // WindowExec itself carries only a spill metric, so the input row
     // count is read from the nearest row-count-preserving descendant
     // that has one: the global window's SinglePartition Exchange
@@ -1180,7 +1189,7 @@ class PlanShapeSpec extends SparkSpec {
     val windowRows = allowedGlobalWindow.toSeq.sorted.flatMap { name =>
       val df = SparkEntry.queries(name)(spark, sf)
       df.write.format("noop").mode("overwrite").save()
-      expand(df.queryExecution.executedPlan).flatMap {
+      planNodes(df.queryExecution.executedPlan).flatMap {
         case w: org.apache.spark.sql.execution.window.WindowExec
           if w.partitionSpec.isEmpty =>
           Seq((name, inputRows(w.child)))
@@ -1201,5 +1210,158 @@ class PlanShapeSpec extends SparkSpec {
     assert(oversized.isEmpty,
       "allowlisted global windows that processed corpus-scale row " +
         s"counts (name, rows): $oversized")
+  }
+
+  test("silver→gold snapshot: WindowGroupLimit before its hash exchange, then one partition") {
+    import org.apache.spark.sql.catalyst.plans.physical.{
+      HashPartitioning, SinglePartition}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowGroupLimitExec
+    val warehouse = tmpDir("plan_snapshot")
+    PipelineSpec.silverFromTwoPolls(spark, tmpDir("plan_snapshot_in"), warehouse)
+    val latest = graft.analytics.GoldAnalytics.latestSnapshot(
+      spark.read.parquet(s"$warehouse/silver/assats_list"))
+    val plan = latest.queryExecution.executedPlan
+    val exchanges = planNodes(plan).collect { case e: ShuffleExchangeExec => e }
+    val (hash, single) = exchanges.partition(
+      _.outputPartitioning.isInstanceOf[HashPartitioning])
+    assert(hash.size == 1 && single.size == 1 &&
+      single.head.outputPartitioning == SinglePartition,
+      s"want one hash exchange under one single-partition exchange:\n$plan")
+    assert(planNodes(single.head.child).contains(hash.head),
+      s"the single-partition move must come after the window:\n$plan")
+    assert(planNodes(hash.head.child).exists(_.isInstanceOf[WindowGroupLimitExec]),
+      s"the window lost its map-side group limit:\n$plan")
+  }
+
+  test("silver→gold: Gold writes over the cached snapshot plan no exchange; job receipt") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import org.apache.spark.scheduler.{
+      SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+      SparkListenerJobStart}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val warehouse = tmpDir("plan_gold")
+    val pipeline =
+      PipelineSpec.silverFromTwoPolls(spark, tmpDir("plan_gold_in"), warehouse)
+    val tag = "silver-to-gold-receipt"
+    @volatile var lastEventMs = System.currentTimeMillis()
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val writes = new ConcurrentLinkedQueue[(String, SparkPlan)]()
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val tags = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.tags"))).getOrElse("")
+        if (tags.split(",").contains(tag)) jobs.add(e.jobId)
+        lastEventMs = System.currentTimeMillis()
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+        ended.add(e.jobId)
+        lastEventMs = System.currentTimeMillis()
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit =
+        lastEventMs = System.currentTimeMillis()
+    }
+    val writeListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        planNodes(qe.executedPlan).foreach {
+          case w: DataWritingCommandExec => w.cmd match {
+            // the listener bus is asynchronous: the fixture's Silver
+            // append can still be queued when this listener registers
+            case c: InsertIntoHadoopFsRelationCommand
+                if c.outputPath.getParent.getName == "gold" =>
+              writes.add((c.outputPath.getName, w.child))
+            case _ =>
+          }
+          case _ =>
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.listenerManager.register(writeListener)
+    spark.sparkContext.addJobTag(tag)
+    try {
+      pipeline.silverToGold("2025-05-24 05:00:00")
+      // the listener buses are asynchronous: wait for 300 ms of quiet
+      val deadline = System.currentTimeMillis() + 10000
+      while ((!ended.containsAll(jobs) ||
+              System.currentTimeMillis() - lastEventMs < 300) &&
+             System.currentTimeMillis() < deadline) Thread.sleep(20)
+    } finally {
+      spark.sparkContext.removeJobTag(tag)
+      spark.listenerManager.unregister(writeListener)
+      spark.sparkContext.removeSparkListener(jobListener)
+    }
+    info(s"silverToGold ran ${jobs.size} jobs")
+    val pinned = Seq("daily_overview", "market_dominance", "supply_dynamics")
+      .flatMap(n => Seq(n, s"${n}_history"))
+    val byTable = writes.toArray(Array.empty[(String, SparkPlan)]).toSeq
+    assert(byTable.map(_._1).toSet == (pinned.toSet ++
+      Set("top_gainers_losers", "top_gainers_losers_history")),
+      s"unexpected write targets: ${byTable.map(_._1)}")
+    byTable.filter(w => pinned.contains(w._1)).foreach { case (table, plan) =>
+      assert(!planNodes(plan).exists(_.isInstanceOf[ShuffleExchangeExec]),
+        s"$table write shuffles over the single-partition snapshot:\n$plan")
+    }
+    // 13 measured on this fixture, 31 before the single-partition
+    // snapshot: a Gold write is one job, not sample + shuffle-map + write
+    assert(jobs.size <= 13, s"silverToGold ran ${jobs.size} jobs")
+  }
+
+  test("stable_literal: plans that differ only in the value share generated code") {
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import graft.functions.CodegenFunctions.stableLiteral
+    def run(c: org.apache.spark.sql.Column) = {
+      val df = spark.range(3).select((col("id") + c).as("v"))
+      val rows = df.collect().map(_.getLong(0)).toSeq
+      val code = planNodes(df.queryExecution.executedPlan).collect {
+        case w: WholeStageCodegenExec => w.doCodeGen()._2.body
+      }
+      assert(code.nonEmpty, s"no codegen stage:\n${df.queryExecution.executedPlan}")
+      (rows, code)
+    }
+    val (r1, c1) = run(stableLiteral(lit(10L)))
+    val (r2, c2) = run(stableLiteral(lit(20L)))
+    assert(r1 == Seq(10L, 11L, 12L) && r2 == Seq(20L, 21L, 22L))
+    assert(c1 == c2, "stable_literal spelled its value out in generated code")
+    // the control: a plain literal is compiled into the code
+    assert(run(lit(10L))._2 != run(lit(20L))._2)
+    val ts = spark.range(1).select(
+      stableLiteral(lit("2025-05-24 05:00:00").cast("timestamp")).cast("string"))
+    assert(ts.head().getString(0) == "2025-05-24 05:00:00")
+  }
+
+  test("silver→gold + dashboard: a later cycle compiles no new classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import PipelineSpec.{asset, poll, t1}
+    val landing = tmpDir("plan_cycles_in")
+    val warehouse = tmpDir("plan_cycles")
+    val pipeline = PipelineSpec.silverFromTwoPolls(spark, landing, warehouse)
+    pipeline.silverToGold("2025-05-24 05:00:00")
+    graft.analytics.GoldAnalytics.dashboard(spark).collect()
+    // the next cycle: a new poll (new prices, market caps and timestamp,
+    // so a new dominance total and dashboard date) and a new audit stamp
+    val t2 = t1 + 3600000L
+    Landing.injectPoll(landing, poll(t2, Seq(
+      asset("bitcoin", 1, "BTC", "Bitcoin", "\"19868975.0\"", "\"21000000.0\"",
+        "\"2160000000000.0\"", "\"19301351533.2\"", "\"108700.0\"", "\"0.5\"",
+        "\"108240.5\""),
+      asset("ethereum", 2, "ETH", "Ethereum", "\"120716917.5\"", "null",
+        "\"301000000000.0\"", "\"9014715590.5\"", "\"2500.0\"", "\"-1.6\"",
+        "\"2539.8\""))), t2)
+    pipeline.bronzeToSilver(landing, "2025-05-24 06:00:00")
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    pipeline.silverToGold("2025-05-24 06:00:00")
+    val dash = graft.analytics.GoldAnalytics.dashboard(spark).collect()
+    val fresh = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(dash.map(_.getAs[java.sql.Timestamp]("data_referencia").getTime)
+      .distinct.toSeq == Seq(t2 / 1000 * 1000), "dashboard is not on the new poll")
+    // per-cycle values (audit stamp, dominance total, latest date) must
+    // not be compiled into code: each would be a fresh class every cycle
+    assert(fresh == 0, s"the second cycle compiled $fresh new classes")
   }
 }
