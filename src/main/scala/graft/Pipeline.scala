@@ -33,7 +33,9 @@ final class Pipeline(spark: SparkSession, warehouseDir: String) {
     * dual-written (history append + current overwrite). Gold writes are
     * exchange-free — their sorts, top-10, the dominance `sum` and the
     * write run in one task each — so a write is one job, not a
-    * range-sample + shuffle-map + write triple.
+    * range-sample + shuffle-map + write triple. Each analysis runs once
+    * for its two writes ([[Sinks.writeAnalysis]]), so the full-history
+    * scan of `top_gainers_losers` runs once per cycle.
     *
     * Returns the Silver row count, the reference's `count()` log line
     * (3-spark…py:54). It comes from an [[Observation]] on the full-history

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.{Column, SparkSessionExtensions}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.{call_function, lit}
 
 /**
  * Session extensions registering graft's native expressions with the
@@ -29,6 +29,23 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("jaro_winkler"),
       info("jaro_winkler", "jaro_winkler(a, b) - Jaro-Winkler similarity of two strings"),
       (children: Seq[Expression]) => JaroWinklerSim(children(0), children(1))))
+    ext.injectFunction((
+      FunctionIdentifier("minhash_bands"),
+      new ExpressionInfo(classOf[MinHashBands].getName, null, "minhash_bands",
+        "minhash_bands(text, k, r, w) - the k/r LSH band hashes of the " +
+          "w-word shingle MinHash signature of text", ""),
+      (children: Seq[Expression]) =>
+        MinHashKernel.build("minhash_bands", Seq("k", "r", "w"), children) {
+          case (text, Seq(k, r, w)) => MinHashBands(text, k, r, w)
+        }))
+    ext.injectFunction((
+      FunctionIdentifier("shingle_set"),
+      new ExpressionInfo(classOf[ShingleSet].getName, null, "shingle_set",
+        "shingle_set(text, w) - the distinct w-word shingles of text", ""),
+      (children: Seq[Expression]) =>
+        MinHashKernel.build("shingle_set", Seq("w"), children) {
+          case (text, Seq(w)) => ShingleSet(text, w)
+        }))
     ext.injectFunction((
       FunctionIdentifier("l2_sq"),
       info("l2_sq", "l2_sq(a, b) - squared Euclidean distance of two float/double vectors"),
@@ -68,4 +85,12 @@ object CodegenFunctions {
 /** Column-API entry points for the registered string functions. */
 object StringFunctions {
   def jaroWinkler(a: Column, b: Column): Column = call_function("jaro_winkler", a, b)
+
+  /** [[MinHashBands]]: the k/r band hashes of `text`. */
+  def minHashBands(text: Column, k: Int, r: Int, w: Int): Column =
+    call_function("minhash_bands", text, lit(k), lit(r), lit(w))
+
+  /** [[ShingleSet]]: the distinct w-word shingles of `text`. */
+  def shingleSet(text: Column, w: Int): Column =
+    call_function("shingle_set", text, lit(w))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.StringFunctions.{minHashBands, shingleSet}
 
 /**
  * Deduplication operators for large-scale text corpora: exact, MinHash+LSH,
@@ -13,9 +14,12 @@ import org.apache.spark.sql.{Column, DataFrame}
  * Design for 100 TB:
  *  - Every stage is a narrow map or a key-partitioned aggregation/join —
  *    no driver-side state, no collect, no cross join.
- *  - The MinHash signature aggregation is a `groupBy(doc, i).min(hash)`:
- *    Spark's partial (map-side) aggregation reduces the shuffle to
- *    |docs| × k rows regardless of shingle volume.
+ *  - MinHash banding is per document: one compiled kernel call
+ *    (`minhash_bands`, [[graft.functions.MinHashBands]]) turns a text into
+ *    its band hashes inside whole-stage codegen, with no shingle rows and
+ *    no signature shuffle ([[bandsPerRow]]). The wide `min` aggregation
+ *    ([[minHashSignaturesWide]]) stays only for callers that need the
+ *    `sig_*` columns or hash weighted bags.
  *  - LSH banding turns the all-pairs problem into an equi-join on
  *    (band, bandHash) — candidate volume is driven by collision rate, not
  *    corpus size². Skewed buckets (boilerplate docs) are handled by AQE
@@ -26,31 +30,17 @@ import org.apache.spark.sql.{Column, DataFrame}
  */
 object TextDedup {
 
-  /** Distinct w-word shingles per document: (docId, shingle) rows.
-    * Docs shorter than w words produce no rows (empty-array explode).
-    *
-    * The word array is materialized as a column BEFORE the shingle lambda:
-    * a lambda body gets no common-subexpression elimination, so an inlined
-    * `split()` would re-run per element_at — O(words²) splits per document
-    * (measured 90× slower at sf0.1). With a bound attribute each
-    * element_at is an O(1) array access inside codegen. */
+  /** Distinct w-word shingles per document: (docId, shingle) rows, one
+    * compiled [[graft.functions.ShingleSet]] call per document exploded.
+    * Docs shorter than w words produce no rows. */
   def shingles(docs: DataFrame, idCol: String, textCol: String,
-               w: Int = 3): DataFrame = {
-    val ws = col("graft_ws")
+               w: Int = 3): DataFrame =
     // Spread documents across the cluster BEFORE the explode: a corpus read
-    // from few input splits would otherwise run the whole shingle+hash
+    // from few input splits would otherwise run the whole shingle
     // pipeline on as many cores as there are files. The 1-row-in → many-out
     // Generate makes this cheap shuffle pay for itself immediately.
     docs.repartition(col(idCol))
-      .select(col(idCol), split(col(textCol), " ").as("graft_ws"))
-      .select(
-        col(idCol),
-        explode(array_distinct(
-          when(size(ws) >= w,
-            transform(sequence(lit(0), size(ws) - w),
-              i => concat_ws(" ", (0 until w).map(o => element_at(ws, i + o + 1)): _*)))
-            .otherwise(array().cast(ArrayType(StringType))))).as("s"))
-  }
+      .select(col(idCol), explode(shingleSet(col(textCol), w)).as("s"))
 
   /** First 8 hex chars of md5(salt ‖ input) as a 32-bit value in a long. */
   private def md5Word32(salt: String, input: Column): Column =
@@ -216,60 +206,39 @@ object TextDedup {
   }
 
   /**
-   * Per-ROW LSH band rows: identical (id, band, bh) values to
-   * `lshBandsFromWide(minHashSignaturesWide(shingles(...)))`, computed as
-   * one narrow projection per document — no explode, no groupBy, no
-   * shuffle. This is the STREAMING form: banding is per-row, so a
-   * document stream can be banded and stream-static-joined against a
-   * stored index with zero stateful aggregation
-   * (`Streaming.nearDupCandidates`). Batch pipelines should keep the
-   * wide-agg form — its map-side combine wins once shingle rows shuffle
-   * anyway for the verification join.
-   *
-   * The K–M hash arrays are materialized as columns BEFORE the k sig
-   * lambdas (no CSE inside lambda bodies — inlining md5 would hash the
-   * shingle array k× per row, the `shingles` trap). Docs with no
-   * shingles (< w words) emit no bands, matching the explode form.
+   * Per-ROW LSH band rows (id, band, bh): identical values to
+   * `lshBandsFromWide(minHashSignaturesWide(shingles(...)))`, computed by
+   * one compiled [[graft.functions.MinHashBands]] call per document and a
+   * `posexplode` — a narrow map: no shingle rows, no signature groupBy, no
+   * shuffle. Every text LSH band path (batch pairs, stored index, streams)
+   * bands through here; a stream is banded per row with no stateful
+   * aggregation (`Streaming.nearDupCandidates`). Docs with no shingles
+   * (< w words, null text) emit no bands.
    */
   def bandsPerRow(docs: DataFrame, idCol: String, textCol: String,
-                  k: Int = 16, r: Int = 4, w: Int = 3): DataFrame = {
-    val ws = col("graft_ws")
-    val sh = col("graft_sh")
-    val withSh = docs
-      .withColumn("graft_ws", split(col(textCol), " "))
-      .withColumn("graft_sh", array_distinct(
-        when(size(ws) >= w,
-          transform(sequence(lit(0), size(ws) - w),
-            i => concat_ws(" ", (0 until w).map(o => element_at(ws, i + o + 1)): _*)))
-          .otherwise(array().cast(ArrayType(StringType)))))
-      .filter(size(sh) > 0)
-    val withH = withSh
-      .withColumn("graft_h1", transform(sh, s => md5Word32("a_", s)))
-      .withColumn("graft_h2", transform(sh, s => md5Word32("b_", s)))
-    val sigs = (0 until k).map(i =>
-      array_min(zip_with(col("graft_h1"), col("graft_h2"),
-        (a, b) => (a + lit(i.toLong) * b) % 4294967296L)).as(s"sig_$i"))
-    lshBandsFromWide(withH.select(col(idCol) +: sigs: _*), idCol, k, r)
-  }
+                  k: Int = 16, r: Int = 4, w: Int = 3): DataFrame =
+    docs.select(col(idCol),
+      posexplode(minHashBands(col(textCol), k, r, w)).as(Seq("band", "bh")))
 
   /** MinHash+LSH near-duplicate pairs verified with exact Jaccard ≥
     * threshold. k hashes, bands of r rows → LSH threshold ≈ (1/b)^(1/r).
-    * Plan shape: shingles → 1 groupBy (wide sigs) → band projection →
-    * band self-join → pruned verification — three shuffles end to end. */
-  /* The shingle table feeds several branches (signatures, both sides of
-   * the verification join, set sizes) with no exchange reuse between
-   * them. Persisting it was measured NEUTRAL-TO-NEGATIVE at sf0.1 once
-   * shingle generation became sub-second: the columnar cache build costs
-   * more than the recompute it saves, and a cached relation blocks AQE's
-   * stage-level re-planning above it. At larger scale, callers that want
+    * Plan shape: per-row bands straight off the scan ([[bandsPerRow]]) →
+    * band self-join → candidate distinct → verification against the
+    * id-partitioned shingle rows. */
+  /* The shingle table feeds both sides of the verification join and the
+   * set sizes; they share its one id exchange. Persisting it was measured
+   * NEUTRAL-TO-NEGATIVE at sf0.1 once shingle generation became
+   * sub-second: the columnar cache build costs more than the recompute it
+   * saves, and a cached relation blocks AQE's stage-level re-planning
+   * above it. At larger scale, callers that want
    * reuse should checkpoint/persist the INPUT corpus slice instead. */
   def minHashLshPairs(docs: DataFrame, idCol: String, textCol: String,
                       k: Int = 16, r: Int = 2, w: Int = 3,
                       threshold: Double = 0.5,
                       maxBucket: Option[Long] = None): DataFrame = {
     val sh = shingles(docs, idCol, textCol, w)
-    val bands = lshBandsFromWide(minHashSignaturesWide(sh, idCol, k), idCol, k, r)
-    val cand = lshCandidates(bands, idCol, maxBucket)
+    val cand = lshCandidates(bandsPerRow(docs, idCol, textCol, k, r, w),
+      idCol, maxBucket)
     jaccard(sh, idCol, cand).filter(col("jaccard") >= threshold)
   }
 
@@ -674,10 +643,8 @@ object TextDedup {
                         maxDist: Int, k: Int = 16, r: Int = 4,
                         w: Int = 3,
                         maxBucket: Option[Long] = None): DataFrame = {
-    val bands = lshBandsFromWide(
-      minHashSignaturesWide(shingles(docs, idCol, textCol, w), idCol, k),
-      idCol, k, r)
-    val cand = lshCandidates(bands, idCol, maxBucket)
+    val cand = lshCandidates(bandsPerRow(docs, idCol, textCol, k, r, w),
+      idCol, maxBucket)
     val t = docs.select(col(idCol), col(textCol))
     cand
       .join(t.select(col(idCol).as("d1"), col(textCol).as("graft_t1")), "d1")
@@ -1415,8 +1382,7 @@ object TextDedup {
     val sh = shingles(docs, idCol, textCol, w)
     val withN = sh.withColumn("n_old", count(lit(1)).over(
       org.apache.spark.sql.expressions.Window.partitionBy(col(idCol))))
-    val bands = lshBandsFromWide(minHashSignaturesWide(sh, idCol, k),
-      idCol, k, r)
+    val bands = bandsPerRow(docs, idCol, textCol, k, r, w)
     val ib = maxBucket match {
       case None => bands
       case Some(cap) =>
@@ -1452,9 +1418,8 @@ object TextDedup {
                         k: Int = 16, r: Int = 4, w: Int = 3,
                         threshold: Double = 0.5): DataFrame = {
     val nsh = shingles(newDocs, idCol, textCol, w)
-    val nbands = lshBandsFromWide(minHashSignaturesWide(nsh, idCol, k),
-      idCol, k, r)
-    val nb = nbands.select(col(idCol).as("d_new"), col("band"), col("bh"))
+    val nb = bandsPerRow(newDocs, idCol, textCol, k, r, w)
+      .select(col(idCol).as("d_new"), col("band"), col("bh"))
     // A [[lshIndex]] built with maxBucket carries (graft_u, graft_m):
     // the collision join then runs as the q358 block decomposition —
     // each new band row first picks up the bucket's m from the 1-row-
@@ -1844,9 +1809,7 @@ object TextDedup {
                            k: Int = 16, r: Int = 4, w: Int = 3,
                            threshold: Double = 0.5): DataFrame = {
     val sh = shingles(docs, idCol, textCol, w)
-    val cand = lshCandidates(
-      lshBandsFromWide(minHashSignaturesWide(sh, idCol, k), idCol, k, r),
-      idCol)
+    val cand = lshCandidates(bandsPerRow(docs, idCol, textCol, k, r, w), idCol)
     val truth = jaccardFromInter(pairIntersections(sh, idCol), sh, idCol)
       .filter(col("jaccard") >= threshold).select("d1", "d2")
     val nd = sh.agg(countDistinct(col(idCol)).as("n_docs"))

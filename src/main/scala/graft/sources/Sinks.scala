@@ -117,13 +117,14 @@ object Sinks {
     spark.read.schema(df.schema).parquet(path).createOrReplaceTempView(table)
   }
 
-  /** S9: one analysis → both sinks. Caller is expected to have cached the
-    * upstream plan (the reference re-runs the whole lineage per action —
-    * SURVEY §4.4 inefficiency #1 — we don't). */
+  /** S9: one analysis → both sinks. The analysis runs once: its rows are
+    * written to the current table, and the history append copies those
+    * just-written files (the reference re-runs the whole lineage per
+    * action — SURVEY §4.4 inefficiency #1 — we don't). */
   def writeAnalysis(df: DataFrame, historyPath: String, currentPath: String,
                     table: String, spark: SparkSession): Unit = {
-    appendHistory(df, historyPath)
     overwriteCurrent(df, currentPath, table, spark)
+    appendHistory(spark.table(table), historyPath)
   }
 
   /** Partitioned append — the 100 TB posture for history tables (SURVEY

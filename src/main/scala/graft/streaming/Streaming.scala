@@ -68,9 +68,9 @@ object Streaming {
 
   /**
    * Streaming incremental near-dup detection: the stream-side half of
-   * `TextDedup.dedupAgainstIndex` — incoming documents are MinHash-banded
-   * PER ROW (`TextDedup.bandsPerRow`: a narrow projection, no stateful
-   * aggregation) and stream-static joined against the stored index bands.
+   * `TextDedup.dedupAgainstIndex` — incoming documents are banded by
+   * `TextDedup.bandsPerRow`, the band path every text LSH operator shares,
+   * and stream-static joined against the stored index bands.
    * Emits (idCol, band, bh, d_old), one row per band collision.
    *
    * Collisions are CANDIDATES: a doc colliding with `d_old` in several
@@ -421,8 +421,8 @@ object Streaming {
    * Streaming SELF-dedup via first-wins LSH bucket claims — the
    * stateful complement of [[nearDupCandidates]] (which checks a stream
    * against a STATIC index): here the stream is its own index. Each
-   * incoming document is MinHash-banded per row ([[TextDedup
-   * .bandsPerRow]], stateless), then every (band, bh) bucket keeps ONE
+   * incoming document is banded by [[TextDedup.bandsPerRow]] (the shared
+   * text band path), then every (band, bh) bucket keeps ONE
    * Long of state — the smallest document id seen (the owner). A
    * document colliding with an already-owned bucket emits `is_dup =
    * true` for that band; reducing a doc's band rows downstream (any

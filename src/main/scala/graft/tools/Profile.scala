@@ -59,9 +59,7 @@ object Profile {
         t("docs.count")(docs.count())
         val sh = TextDedup.shingles(docs, "doc_id", "text")
         t("shingles.count")(sh.count())
-        val wide = TextDedup.minHashSignaturesWide(sh, "doc_id", 16)
-        t("wide sigs.count")(wide.count())
-        val bands = TextDedup.lshBandsFromWide(wide, "doc_id", 16, 4)
+        val bands = TextDedup.bandsPerRow(docs, "doc_id", "text", 16, 4, 3)
         t("bands.count")(bands.count())
         val cand = TextDedup.lshCandidates(bands, "doc_id")
         t("candidates.count")(cand.count())

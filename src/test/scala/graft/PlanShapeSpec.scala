@@ -865,6 +865,40 @@ class PlanShapeSpec extends SparkSpec {
       case p => p
     }
 
+  test("minHashLshPairs: bands off the scan by the compiled kernel, no lambdas") {
+    import org.apache.spark.sql.catalyst.expressions.{
+      HigherOrderFunction, LambdaFunction}
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.exchange.{
+      ReusedExchangeExec, ShuffleExchangeExec}
+    import graft.functions.MinHashBands
+    val pairs = graft.operators.TextDedup.minHashLshPairs(
+      spark.read.parquet(s"$sf/documents.parquet"), "doc_id", "text",
+      k = 16, r = 4, w = 3, threshold = 0.5)
+    pairs.collect()
+    val plan = pairs.queryExecution.executedPlan
+    val nodes = planNodes(plan)
+    val lambdas = nodes.flatMap(_.expressions.flatMap(_.collect {
+      case f: HigherOrderFunction => f.prettyName
+      case _: LambdaFunction => "lambda"
+    }))
+    assert(lambdas.isEmpty, s"interpreted lambdas left in the plan: $lambdas\n$plan")
+    def isExchange(p: org.apache.spark.sql.execution.SparkPlan) = p match {
+      case _: ShuffleExchangeExec | _: ReusedExchangeExec => true
+      case _ => false
+    }
+    val bands = nodes.collect {
+      case g: GenerateExec if g.generator.exists(_.isInstanceOf[MinHashBands]) => g
+    }
+    assert(bands.nonEmpty && bands.forall(g => !planNodes(g.child).exists(isExchange)),
+      s"the band rows must come straight off the scan:\n$plan")
+    // 11 exchanges on sf0.001 (7 shuffles + 4 reused); 12 (7 + 5) with
+    // the transform/zip_with bands, whose branch read the shingle rows'
+    // doc-id exchange before its signature aggregate
+    val exchanges = nodes.count(isExchange)
+    assert(exchanges <= 11, s"$exchanges exchanges:\n$plan")
+  }
+
   test("phash near-dup drops the media payload before any shuffle (q207)") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.types.BinaryType
@@ -1234,7 +1268,11 @@ class PlanShapeSpec extends SparkSpec {
       s"the window lost its map-side group limit:\n$plan")
   }
 
-  test("silver→gold: Gold writes over the cached snapshot plan no exchange; job receipt") {
+  /** Runs one `silverToGold` on the PipelineSpec fixture and records the
+    * ids of the jobs it ran and, in completion order, each Gold write's
+    * table name and executed plan (under the write command). */
+  private def recordSilverToGold(prefix: String)
+      : (Int, Seq[(String, org.apache.spark.sql.execution.SparkPlan)]) = {
     import java.util.concurrent.ConcurrentLinkedQueue
     import org.apache.spark.scheduler.{
       SparkListener, SparkListenerEvent, SparkListenerJobEnd,
@@ -1242,12 +1280,11 @@ class PlanShapeSpec extends SparkSpec {
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.util.QueryExecutionListener
-    val warehouse = tmpDir("plan_gold")
+    val warehouse = tmpDir(prefix)
     val pipeline =
-      PipelineSpec.silverFromTwoPolls(spark, tmpDir("plan_gold_in"), warehouse)
-    val tag = "silver-to-gold-receipt"
+      PipelineSpec.silverFromTwoPolls(spark, tmpDir(s"${prefix}_in"), warehouse)
+    val tag = s"$prefix-receipt"
     @volatile var lastEventMs = System.currentTimeMillis()
     val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
@@ -1296,10 +1333,15 @@ class PlanShapeSpec extends SparkSpec {
       spark.listenerManager.unregister(writeListener)
       spark.sparkContext.removeSparkListener(jobListener)
     }
-    info(s"silverToGold ran ${jobs.size} jobs")
+    (jobs.size, writes.toArray(Array.empty[(String, SparkPlan)]).toSeq)
+  }
+
+  test("silver→gold: Gold writes over the cached snapshot plan no exchange; job receipt") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val (jobs, byTable) = recordSilverToGold("plan_gold")
+    info(s"silverToGold ran $jobs jobs")
     val pinned = Seq("daily_overview", "market_dominance", "supply_dynamics")
       .flatMap(n => Seq(n, s"${n}_history"))
-    val byTable = writes.toArray(Array.empty[(String, SparkPlan)]).toSeq
     assert(byTable.map(_._1).toSet == (pinned.toSet ++
       Set("top_gainers_losers", "top_gainers_losers_history")),
       s"unexpected write targets: ${byTable.map(_._1)}")
@@ -1309,7 +1351,23 @@ class PlanShapeSpec extends SparkSpec {
     }
     // 13 measured on this fixture, 31 before the single-partition
     // snapshot: a Gold write is one job, not sample + shuffle-map + write
-    assert(jobs.size <= 13, s"silverToGold ran ${jobs.size} jobs")
+    assert(jobs <= 13, s"silverToGold ran $jobs jobs")
+  }
+
+  test("silver→gold: the two top_gainers_losers writes scan Silver once") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val (_, byTable) = recordSilverToGold("plan_movers")
+    // the cached snapshot is a leaf here: only the losers branch's
+    // full-history read counts
+    val scans = byTable.filter(_._1.startsWith("top_gainers_losers"))
+      .map { case (table, plan) => table -> planNodes(plan).count {
+        case s: FileSourceScanExec =>
+          s.relation.location.rootPaths.exists(_.toString.contains("/silver/"))
+        case _ => false
+      } }
+    assert(scans.size == 2, s"writes: ${byTable.map(_._1)}")
+    // 2 when each write ran the analysis: one full-history scan per write
+    assert(scans.map(_._2).sum == 1, s"Silver scans per write: $scans")
   }
 
   test("stable_literal: plans that differ only in the value share generated code") {
