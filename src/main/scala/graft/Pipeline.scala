@@ -40,9 +40,12 @@ final class Pipeline(spark: SparkSession, warehouseDir: String) {
     * Returns the Silver row count, the reference's `count()` log line
     * (3-spark…py:54). It comes from an [[Observation]] on the full-history
     * scan that `top_gainers_losers` runs anyway, not from a separate
-    * action; the fail-fast on a missing table is the read's. */
+    * action; the fail-fast on a missing table is the read's. Silver is
+    * read with the schema [[BronzeToSilver]] writes, so no footer
+    * schema-inference job runs. */
   def silverToGold(analysisTs: String): Long = {
-    val silver = spark.read.parquet(s"$warehouseDir/silver/assats_list")
+    val silver = spark.read.schema(BronzeToSilver.schema(spark))
+      .parquet(s"$warehouseDir/silver/assats_list")
     val silverRows = Observation("silver_rows")
     val history = silver.observe(silverRows, count(lit(1)).as("rows"))
       .withColumn("data_referencia_dt", col("data_referencia").cast("timestamp"))

@@ -1,8 +1,9 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.model.Schemas
 
 /**
  * Bronze → Silver: explode the per-poll asset array and project it to the
@@ -43,4 +44,11 @@ object BronzeToSilver {
         from_unixtime(col("timestamp") / 1000).as("data_referencia"),
         lit(processedAtUtc).as("data_processamento")
       )
+
+  /** The Silver schema [[apply]] writes, as Parquet reads it back (every
+    * field nullable). Analysis of the projection over an empty Bronze
+    * frame, so no job runs. */
+  def schema(spark: SparkSession): StructType = StructType(
+    apply(spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      Schemas.rawSchema), "").schema.map(_.copy(nullable = true)))
 }

@@ -1,9 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{
+  ByteType, DataType, DecimalType, IntegerType, LongType, ShortType}
 
 /**
  * Distributed graph primitives for the dedup pipeline. Near-dup detection
@@ -14,8 +18,9 @@ import org.apache.spark.sql.types.DecimalType
  * The algorithm is HashMin label propagation: every node starts as its own
  * label, each round every node takes the min of its own and its neighbors'
  * labels, converging in O(graph diameter) rounds. Each round is ONE shuffle
- * (a groupBy on node id); the edge list is never collected and no state
- * grows beyond (node, label). Near-dup graphs are almost-cliques of small
+ * (a groupBy on node id) and no state grows beyond (node, label); only an
+ * edge set small enough to run on the driver is ever collected (see
+ * [[connectedComponents]]). Near-dup graphs are almost-cliques of small
  * diameter, so 3-5 rounds close them in practice. For adversarial
  * long-chain graphs at 100 TB the round count is the bottleneck and the
  * large-star/small-star algorithm (Kiveris et al., "Connected Components
@@ -140,18 +145,28 @@ object Graph {
    * Returns (`node`, `component`) where `component` is the smallest node
    * id reachable from `node`. Nodes are those appearing in ≥1 edge.
    *
-   * The driver loop only ever pulls back ONE scalar per round (the exact
-   * label sum, for convergence detection) — the data path stays
-   * distributed.
-   * Lineage is truncated each round; without that the iterated plan nests
-   * `maxIters` self-joins and analysis cost explodes.
+   * Strategy by size (HashMin): one probe reads at most 2^16 + 1 rows
+   * of the symmetric edge set. If it holds at most 2^16 rows and the
+   * ids are integral, the rounds run on the driver over dense indices
+   * and CSR adjacency — a few MB of driver heap — and the labels come
+   * back as a local DataFrame: the probe is the only action, with no
+   * per-round jobs, probes or lineage cuts (the contracted delta graphs
+   * of [[incrementalComponents]] are typically this small). Otherwise
+   * the rounds stay distributed and the driver pulls back ONE scalar
+   * per probe (the exact label sum, for convergence detection); lineage
+   * is truncated each round, since without that the iterated plan nests
+   * `maxIters` self-joins and analysis cost explodes. Both paths run the same rounds under the
+   * same probe schedule, so they return the same rows, schema and round
+   * count, and throw the same way.
    *
-   * Checkpointing mode: by default each round uses `localCheckpoint`,
-   * which stores blocks in EXECUTOR memory/disk — fast, but on a real
-   * cluster an executor loss mid-loop kills the job (blocks are not
-   * replicated to reliable storage). Passing `reliable = true` (after
-   * `spark.sparkContext.setCheckpointDir` to an HDFS/object-store path)
-   * makes every `checkpointInterval`-th round a reliable `checkpoint()`.
+   * Checkpointing mode (distributed rounds; the driver path keeps no
+   * round state on executors): by default each round uses
+   * `localCheckpoint`, which stores blocks in EXECUTOR memory/disk —
+   * fast, but on a real cluster an executor loss mid-loop kills the job
+   * (blocks are not replicated to reliable storage). Passing
+   * `reliable = true` (after `spark.sparkContext.setCheckpointDir` to an
+   * HDFS/object-store path; required on both paths) makes every
+   * `checkpointInterval`-th round a reliable `checkpoint()`.
    * NOTE the honest contract: intermediate rounds still live in
    * executor-local blocks, and Spark does NOT auto-resume from the last
    * reliable checkpoint — an executor loss during an intermediate round
@@ -168,8 +183,10 @@ object Graph {
    *
    * `algorithm`:
    *   - `"hashmin"` (default): O(diameter) rounds, one shuffle per
-   *     round, state = (node, label). Right for near-dup graphs, whose
-   *     components are almost-cliques of tiny diameter.
+   *     round, state = (node, label); on the driver when small (above).
+   *     Right for near-dup graphs, whose components are almost-cliques
+   *     of tiny diameter. A null id is a node that only receives labels:
+   *     it ends with the least component among its neighbors.
    *   - `"two-phase"`: the alternating large-star/small-star algorithm
    *     (Kiveris et al., "Connected Components in MapReduce and
    *     Beyond", SoCC'14), which converges in O(log² n) rounds
@@ -185,6 +202,7 @@ object Graph {
    *     already a min-rooted star forest (the alternation's only
    *     fixpoints, Kiveris §3) the round it forms — the set-equality
    *     alternative needs the round AFTER to observe nothing moved.
+   *     Always distributed; a null id is labeled null.
    */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           maxIters: Int = 25,
@@ -220,58 +238,163 @@ object Graph {
     // symmetric closure: propagate labels in both directions
     val sym = e.union(e.select(col("b").as("a"), col("a").as("b")))
       .distinct().persist()
-    var labels = save(sym.select(col("a").as("node")).distinct()
-      .withColumn("component", col("node")), 0)
+    val seed = sym.select(col("a").as("node")).distinct()
+      .withColumn("component", col("node"))
+    // one round: every node takes the min of its own and its neighbors'
+    // labels (a null node only receives — the join never matches null)
+    def step(cur: DataFrame): DataFrame = {
+      val msgs = sym.join(cur, sym("b") === cur("node"))
+        .select(sym("a").as("node"), col("component"))
+      cur.unionByName(msgs)
+        .groupBy("node").agg(min("component").as("component"))
+    }
+    // Size decides the strategy, as a small relation is broadcast rather
+    // than shuffled: a symmetric edge set of at most LocalMaxEdges rows
+    // runs its rounds on the driver after one probe action. On a larger
+    // graph the probe's rows are dropped: it fills sym cache partitions
+    // that the first round scans anyway, but its 1-2 take jobs and the
+    // shipped rows are extra (0.2-0.3 s on 4 cores).
+    val onDriver = localIds.lift(sym.schema("a").dataType).flatMap { toId =>
+      val rows = sym.limit(LocalMaxEdges + 1).collect()
+      Option.when(rows.length <= LocalMaxEdges) {
+        val (labels, iter, converged) = localHashMin(rows, maxIters, toId)
+        (edges.sparkSession.createDataFrame(labels.asJava, step(seed).schema),
+          iter, converged)
+      }
+    }
     // Convergence scalar: HashMin labels only ever DECREASE, so the label
     // set changed iff Σ component changed — one exact-decimal aggregate
     // per round instead of a join against the previous labels (saves a
     // |nodes|-sized join + filter per round; DECIMAL(38,0) cannot
-    // overflow on int64 labels at any node count below 10^19).
+    // overflow on int64 labels at any node count below 10^19). The null
+    // node is left out: its label rises from null, which could cancel a
+    // decrease elsewhere in the sum.
     def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val s = df.agg(sum(col("component").cast(DecimalType(38, 0))))
-        .head.getDecimal(0)
+      val s = df.agg(sum(when(col("node").isNotNull, col("component"))
+          .cast(DecimalType(38, 0))))
+        .head().getDecimal(0)
       if (s == null) java.math.BigDecimal.ZERO else s // empty node set
     }
-    var prevSum = labelSum(labels)
-    var iter = 0
-    var probes = 0
-    var converged = false
-    // r20: probe BATCHING for long-diameter graphs. The convergence probe
-    // is one action per round — an O(|labels|) aggregate plus a driver
-    // round-trip (plan analysis, AQE stage scheduling), which on a
-    // diameter-d graph costs d probes for work the labels themselves
-    // reveal for free (monotone-decreasing sum: equality across ANY
-    // number of batched steps ⟺ none of them changed a label). Near-dup
-    // graphs are near-cliques that close in ≤3 rounds, so the first 3
-    // probes stay per-step (their behavior — and per-step cost at scale —
-    // is bit-unchanged); only a graph still moving after 3 rounds has
-    // revealed a long diameter, and from there steps run 4 per probe:
-    // 4× fewer label-table scans and driver round-trips, at most 3
-    // post-convergence propagation steps wasted (each a no-op join over
-    // already-fixed labels). q289's diameter-24 ε-graph measured 24
-    // probe actions → 9 under this schedule.
-    while (iter < maxIters && !converged) {
-      val steps = if (probes < 3) 1 else math.min(4, maxIters - iter)
-      var cur = labels
-      for (_ <- 1 to steps) {
-        val msgs = sym.join(cur, sym("b") === cur("node"))
-          .select(sym("a").as("node"), col("component"))
-        cur = save(cur.unionByName(msgs)
-          .groupBy("node").agg(min("component").as("component")), iter + 1)
-        iter += 1
-      }
-      val s = labelSum(cur)
-      labels = cur
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      probes += 1
-    }
+    val (labels, iter, converged) = onDriver.getOrElse(
+      hashMinRounds(save(seed, 0), maxIters)(
+        (cur, round) => save(step(cur), round))(labelSum))
     sym.unpersist()
     if (!converged) throw new IllegalStateException(
       s"connectedComponents did not converge in $maxIters rounds — " +
       "labels were still propagating; raise maxIters (graph diameter " +
       "exceeds the round budget)")
     (labels, iter)
+  }
+
+  /** Symmetric edge sets of at most this many rows run HashMin on the
+    * driver. They hold at most as many nodes, so the collected rows, the
+    * id index, the CSR arrays and two label arrays take a few MB of
+    * driver heap. */
+  private val LocalMaxEdges = 1 << 16
+
+  /** Id types the driver path handles: the integral types, widened to
+    * Long for the rounds and narrowed back for the result rows. Any
+    * other id type takes the distributed loop. */
+  private val localIds: PartialFunction[DataType, Long => Any] = {
+    case ByteType => _.toByte
+    case ShortType => _.toShort
+    case IntegerType => _.toInt
+    case LongType => l => l
+  }
+
+  /** The HashMin round and probe schedule, shared by the distributed and
+    * the driver loop so both run the same rounds: `round(state, r)`
+    * applies round r, `labelSum` is the convergence scalar. Returns the
+    * final state, the rounds run and whether the labels converged.
+    *
+    * r20: probe BATCHING for long-diameter graphs. The convergence probe
+    * is one action per round — an O(|labels|) aggregate plus a driver
+    * round-trip (plan analysis, AQE stage scheduling), which on a
+    * diameter-d graph costs d probes for work the labels themselves
+    * reveal for free (monotone-decreasing sum: equality across ANY
+    * number of batched steps ⟺ none of them changed a label). Near-dup
+    * graphs are near-cliques that close in ≤3 rounds, so the first 3
+    * probes stay per-step (their behavior — and per-step cost at scale —
+    * is bit-unchanged); only a graph still moving after 3 rounds has
+    * revealed a long diameter, and from there steps run 4 per probe:
+    * 4× fewer label-table scans and driver round-trips, at most 3
+    * post-convergence propagation steps wasted (each a no-op join over
+    * already-fixed labels). q289's diameter-24 ε-graph measured 24
+    * probe actions → 9 under this schedule. */
+  private def hashMinRounds[S](init: S, maxIters: Int)(
+      round: (S, Int) => S)(labelSum: S => java.math.BigDecimal)
+      : (S, Int, Boolean) = {
+    var labels = init
+    var prevSum = labelSum(labels)
+    var iter = 0
+    var probes = 0
+    var converged = false
+    while (iter < maxIters && !converged) {
+      val steps = if (probes < 3) 1 else math.min(4, maxIters - iter)
+      for (_ <- 1 to steps) {
+        iter += 1
+        labels = round(labels, iter)
+      }
+      val s = labelSum(labels)
+      converged = s.compareTo(prevSum) == 0
+      prevSum = s
+      probes += 1
+    }
+    (labels, iter, converged)
+  }
+
+  /** HashMin on the driver over the collected symmetric edge set `rows`
+    * (a, b): dense node indices, CSR adjacency (a receives from b) and
+    * an `Array[Long]` of labels, under [[hashMinRounds]]. Returns the
+    * (node, component) rows, ids mapped back by `toId`. A null id is a
+    * node as in the distributed plan: it only receives, so it ends with
+    * the least label among its neighbors. */
+  private def localHashMin(rows: Array[Row], maxIters: Int, toId: Long => Any)
+      : (Seq[Row], Int, Boolean) = {
+    val index = mutable.LongMap.empty[Int]
+    val ids = mutable.ArrayBuilder.make[Long]
+    def at(r: Row, i: Int): Int =
+      if (r.isNullAt(i)) -1
+      else {
+        val id = r.getAs[Number](i).longValue
+        index.getOrElseUpdate(id, { ids += id; index.size })
+      }
+    val src = rows.map(at(_, 0))
+    val dst = rows.map(at(_, 1))
+    val hasNull = src.contains(-1)
+    val n = index.size
+    val start = new Array[Int](n + 1)
+    for (j <- rows.indices if src(j) >= 0 && dst(j) >= 0) start(src(j) + 1) += 1
+    for (v <- 0 until n) start(v + 1) += start(v)
+    val nbr = new Array[Int](start(n))
+    val fill = start.clone()
+    for (j <- rows.indices if src(j) >= 0 && dst(j) >= 0) {
+      nbr(fill(src(j))) = dst(j)
+      fill(src(j)) += 1
+    }
+    val toNull = rows.indices.filter(j => src(j) < 0 && dst(j) >= 0)
+      .map(dst).toArray
+    // state: the labels of the indexed nodes and the null node's label
+    def round(s: (Array[Long], Option[Long]), r: Int) = {
+      val (cur, nullLabel) = s
+      val next = Array.tabulate(n) { v =>
+        var m = cur(v)
+        var k = start(v)
+        while (k < start(v + 1)) { m = math.min(m, cur(nbr(k))); k += 1 }
+        m
+      }
+      (next, (nullLabel ++ toNull.map(cur)).minOption)
+    }
+    def labelSum(s: (Array[Long], Option[Long])) = new java.math.BigDecimal(
+      s._1.foldLeft(java.math.BigInteger.ZERO)(
+        (acc, l) => acc.add(java.math.BigInteger.valueOf(l))))
+    val nodes = ids.result()
+    val ((labels, nullLabel), iter, converged) =
+      hashMinRounds((nodes, Option.empty[Long]), maxIters)(round)(
+        labelSum)
+    val out = nodes.indices.map(v => Row(toId(nodes(v)), toId(labels(v))))
+    (if (hasNull) out :+ Row(null, nullLabel.map(toId).orNull) else out,
+      iter, converged)
   }
 
   /** Alternating large-star/small-star rounds; see [[connectedComponents]]
@@ -642,7 +765,8 @@ object Graph {
    * Scale shape: one key-partitioned lookup join of the delta's
    * endpoints against the label table, a distinct on contracted pairs
    * (bounded by the delta, not the graph), CC on that contracted edge
-   * set (components-touched scale), then ONE remap join back over the
+   * set (components-touched scale; up to 2^16 symmetric rows it runs on
+   * the driver after one probe job), then ONE remap join back over the
    * label table — the remap side is bounded by the merged components
    * and broadcasts. The full edge history is never read.
    *

@@ -96,6 +96,19 @@ class PipelineSpec extends SparkSpec {
     assert(dash == DashboardRows, dash.mkString("\n"))
   }
 
+  test("silver→gold: Silver read with the written schema; a missing table fails fast") {
+    val warehouse = tmpDir("warehouse_schema")
+    val pipeline = silverFromTwoPolls(spark, tmpDir("landing_schema"), warehouse)
+    // the declared read schema is what a footer inference would give
+    val inferred = spark.read.parquet(s"$warehouse/silver/assats_list").schema
+    assert(graft.etl.BronzeToSilver.schema(spark) == inferred)
+    assert(pipeline.silverToGold("2025-05-24 05:00:00") == 6)
+    intercept[org.apache.spark.sql.AnalysisException] {
+      new Pipeline(spark, tmpDir("warehouse_empty"))
+        .silverToGold("2025-05-24 05:00:00")
+    }
+  }
+
   test("market dominance skip guard: all-null market caps → analysis skipped") {
     import graft.analytics.GoldAnalytics
     val landing = tmpDir("landing2")

@@ -1074,6 +1074,19 @@ class PlanShapeSpec extends SparkSpec {
       s"remap join must broadcast:\n$plan")
   }
 
+  test("incremental CC: one q221 collect runs its components on the driver; job receipt") {
+    // both connectedComponents calls see a few near-duplicate edges: one
+    // probe each instead of per-round label-sum probes and cuts
+    val (jobs, rows) = countJobs("q221-receipt")(
+      graft.queries.RefineQueries.q221IncrementalCC(spark, sf).collect())
+    info(s"q221 ran $jobs jobs for ${rows.length} rows")
+    assert(rows.nonEmpty)
+    // 27 or 28 on sf0.001 (one AQE stage job of the contracted-edge
+    // pipeline comes and goes from run to run in one JVM), 47 or 48 when
+    // both ran the distributed rounds
+    assert(jobs <= 28, s"q221 ran $jobs jobs")
+  }
+
   test("residual IVFADC: no vector column crosses a shuffle (q222)") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.types.ArrayType
@@ -1268,27 +1281,16 @@ class PlanShapeSpec extends SparkSpec {
       s"the window lost its map-side group limit:\n$plan")
   }
 
-  /** Runs one `silverToGold` on the PipelineSpec fixture and records the
-    * ids of the jobs it ran and, in completion order, each Gold write's
-    * table name and executed plan (under the write command). */
-  private def recordSilverToGold(prefix: String)
-      : (Int, Seq[(String, org.apache.spark.sql.execution.SparkPlan)]) = {
-    import java.util.concurrent.ConcurrentLinkedQueue
+  /** Runs `body` under a job tag and returns the number of Spark jobs it
+    * started, with its result. The listener bus is asynchronous: it waits
+    * for every counted job to end and then for 300 ms of quiet. */
+  private def countJobs[T](tag: String)(body: => T): (Int, T) = {
     import org.apache.spark.scheduler.{
       SparkListener, SparkListenerEvent, SparkListenerJobEnd,
       SparkListenerJobStart}
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.command.DataWritingCommandExec
-    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val warehouse = tmpDir(prefix)
-    val pipeline =
-      PipelineSpec.silverFromTwoPolls(spark, tmpDir(s"${prefix}_in"), warehouse)
-    val tag = s"$prefix-receipt"
     @volatile var lastEventMs = System.currentTimeMillis()
     val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val writes = new ConcurrentLinkedQueue[(String, SparkPlan)]()
     val jobListener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val tags = Option(e.properties)
@@ -1303,6 +1305,35 @@ class PlanShapeSpec extends SparkSpec {
       override def onOtherEvent(e: SparkListenerEvent): Unit =
         lastEventMs = System.currentTimeMillis()
     }
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.sparkContext.addJobTag(tag)
+    try {
+      val result = body
+      val deadline = System.currentTimeMillis() + 10000
+      while ((!ended.containsAll(jobs) ||
+              System.currentTimeMillis() - lastEventMs < 300) &&
+             System.currentTimeMillis() < deadline) Thread.sleep(20)
+      (jobs.size, result)
+    } finally {
+      spark.sparkContext.removeJobTag(tag)
+      spark.sparkContext.removeSparkListener(jobListener)
+    }
+  }
+
+  /** Runs one `silverToGold` on the PipelineSpec fixture and records the
+    * number of jobs it ran and, in completion order, each Gold write's
+    * table name and executed plan (under the write command). */
+  private def recordSilverToGold(prefix: String)
+      : (Int, Seq[(String, org.apache.spark.sql.execution.SparkPlan)]) = {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val warehouse = tmpDir(prefix)
+    val pipeline =
+      PipelineSpec.silverFromTwoPolls(spark, tmpDir(s"${prefix}_in"), warehouse)
+    val writes = new ConcurrentLinkedQueue[(String, SparkPlan)]()
     val writeListener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
         planNodes(qe.executedPlan).foreach {
@@ -1318,22 +1349,11 @@ class PlanShapeSpec extends SparkSpec {
         }
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    spark.sparkContext.addSparkListener(jobListener)
     spark.listenerManager.register(writeListener)
-    spark.sparkContext.addJobTag(tag)
-    try {
-      pipeline.silverToGold("2025-05-24 05:00:00")
-      // the listener buses are asynchronous: wait for 300 ms of quiet
-      val deadline = System.currentTimeMillis() + 10000
-      while ((!ended.containsAll(jobs) ||
-              System.currentTimeMillis() - lastEventMs < 300) &&
-             System.currentTimeMillis() < deadline) Thread.sleep(20)
-    } finally {
-      spark.sparkContext.removeJobTag(tag)
-      spark.listenerManager.unregister(writeListener)
-      spark.sparkContext.removeSparkListener(jobListener)
-    }
-    (jobs.size, writes.toArray(Array.empty[(String, SparkPlan)]).toSeq)
+    val (jobs, _) = try {
+      countJobs(s"$prefix-receipt")(pipeline.silverToGold("2025-05-24 05:00:00"))
+    } finally spark.listenerManager.unregister(writeListener)
+    (jobs, writes.toArray(Array.empty[(String, SparkPlan)]).toSeq)
   }
 
   test("silver→gold: Gold writes over the cached snapshot plan no exchange; job receipt") {
@@ -1349,9 +1369,10 @@ class PlanShapeSpec extends SparkSpec {
       assert(!planNodes(plan).exists(_.isInstanceOf[ShuffleExchangeExec]),
         s"$table write shuffles over the single-partition snapshot:\n$plan")
     }
-    // 13 measured on this fixture, 31 before the single-partition
-    // snapshot: a Gold write is one job, not sample + shuffle-map + write
-    assert(jobs <= 13, s"silverToGold ran $jobs jobs")
+    // 12 measured on this fixture, 31 before the single-partition
+    // snapshot (a Gold write is one job, not sample + shuffle-map +
+    // write) and 13 while Silver was read by footer inference
+    assert(jobs <= 12, s"silverToGold ran $jobs jobs")
   }
 
   test("silver→gold: the two top_gainers_losers writes scan Silver once") {

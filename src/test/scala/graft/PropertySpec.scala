@@ -264,6 +264,134 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  /** Union-find components of the non-null edges (the root of each set is
+    * its least id), plus the HashMin rule for a null id: it only receives
+    * labels, so it takes the least component among its non-null
+    * neighbors, or stays null without one. */
+  private def unionFindComponents(es: Seq[(Option[Long], Option[Long])])
+      : Map[Option[Long], Option[Long]] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    es.foreach { case (a, b) =>
+      a.foreach(find); b.foreach(find)
+      for (x <- a; y <- b) {
+        val (rx, ry) = (find(x), find(y))
+        if (rx != ry) parent(math.max(rx, ry)) = math.min(rx, ry)
+      }
+    }
+    val comps = parent.keys.map(x => Option(x) -> Option(find(x))).toMap
+    if (es.forall { case (a, b) => a.nonEmpty && b.nonEmpty }) comps
+    else comps + (None -> es.collect {
+      case (Some(x), None) => find(x)
+      case (None, Some(y)) => find(y)
+    }.minOption)
+  }
+
+  /** Random dedup-shaped graphs: random edges over 30 ids, a path with
+    * random orientations, isolated pair islands, a self-loop and a
+    * self-loop-only node, duplicate and reversed copies, and sometimes an
+    * edge with a null endpoint. */
+  private val ccGraph: Gen[Seq[(Option[Long], Option[Long])]] = for {
+    rnd <- Gen.listOfN(10, Gen.zip(Gen.choose(0L, 29L), Gen.choose(0L, 29L)))
+    len <- Gen.choose(2, 12)
+    flips <- Gen.listOfN(len, Gen.prob(0.5))
+    islands <- Gen.choose(0, 3)
+    dups <- Gen.choose(0, 4)
+    loop <- Gen.choose(0L, 29L)
+    nullNbr <- Gen.option(Gen.choose(0L, 52L))
+  } yield {
+    val path = (0 until len).zip(flips).map { case (i, f) =>
+      if (f) (41L + i, 40L + i) else (40L + i, 41L + i) }
+    val base = rnd ++ path ++
+      (0 until islands).map(i => (100L + 2 * i, 101L + 2 * i)) ++
+      Seq((loop, loop), (90L, 90L))
+    val all = base ++ base.take(dups) ++ base.take(dups).map(_.swap)
+    all.map { case (a, b) => (Option(a), Option(b)) } ++
+      nullNbr.map(x => (Option(x), Option.empty[Long]))
+  }
+
+  test("HashMin CC ≡ two-phase CC ≡ union-find on random graphs, both HashMin paths") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import graft.operators.Graph
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => Option(r.get(0)).map(_.toString.toLong) ->
+        Option(r.get(1)).map(_.toString.toLong)).toMap
+    def check(es: Seq[(Option[Long], Option[Long])], onDriver: Boolean,
+              reliable: Boolean = false): Unit = {
+      val ref = unionFindComponents(es)
+      // the differing nodes only: the large graphs hold 65540 labels
+      def same(what: String, got: Map[Option[Long], Option[Long]],
+               want: Map[Option[Long], Option[Long]]): Unit = {
+        val bad = (got.keySet ++ want.keySet).filter(k => got.get(k) != want.get(k))
+        assert(bad.isEmpty, s"$what differs from union-find at " +
+          s"${bad.take(8).map(k => k -> (got.get(k), want.get(k)))} on " +
+          s"${es.size} edges ${es.take(64)}")
+      }
+      val df = es.toDF("d1", "d2")
+      val (hm, rounds) = Graph.connectedComponentsWithRounds(df, "d1", "d2",
+        reliable = reliable, checkpointInterval = 1)
+      assert(hm.queryExecution.analyzed.isInstanceOf[LocalRelation] ==
+        onDriver, s"driver path expected: $onDriver")
+      assert(rounds >= 1 && rounds <= 25)
+      same("HashMin", labels(hm), ref)
+      // two-phase labels a null id null: its rounds drop null edges
+      val tp = Graph.connectedComponents(df, "d1", "d2",
+        reliable = reliable, checkpointInterval = 1, algorithm = "two-phase")
+      same("two-phase", labels(tp), ref.map { case (n, c) => n -> n.flatMap(_ => c) })
+      if (onDriver) { // any integral id type, narrowed back on output
+        val ints = df.select(col("d1").cast("int"), col("d2").cast("int"))
+        val hmInt = Graph.connectedComponents(ints, "d1", "d2")
+        assert(hmInt.schema.map(_.dataType.typeName) == Seq("integer", "integer"))
+        same("HashMin on int ids", labels(hmInt), ref)
+      }
+    }
+    forAll(ccGraph)(check(_, onDriver = true))
+    check(Seq.empty, onDriver = true)
+    // a label rising from null on the null node can cancel the decreases
+    // elsewhere in a convergence sum (+5 against -4 and -1), stopping
+    // the loop after round 1 with node 10 still labeled 9; here on the
+    // driver path, below on the distributed one
+    check(Seq((Some(5L), None), (Some(5L), Some(9L)), (Some(9L), Some(10L))),
+      onDriver = true)
+    check(Seq((None, None), (Some(3L), Some(4L))), onDriver = true)
+    // above the driver bound: 12000 4-node paths (72000 symmetric rows)
+    // with the same extras run the distributed loop
+    val big = (0L until 12000L).flatMap { c =>
+        Seq((4 * c, 4 * c + 1), (4 * c + 2, 4 * c + 1), (4 * c + 2, 4 * c + 3))
+      }.map { case (a, b) => (Option(a), Option(b)) } ++
+      Seq((Some(7L), Some(7L)), (Some(3L), Some(2L)), (Some(5L), None))
+    check(big, onDriver = false)
+    // the same case on the distributed loop: 65537 self-loops (converged
+    // at the seed, so round 1 moves none of their labels) lift it above
+    // the driver bound
+    check((100L until 65637L).map(i => (Option(i), Option(i))) ++
+      Seq((Some(5L), None), (Some(5L), Some(9L)), (Some(9L), Some(10L))),
+      onDriver = false)
+    // reliable mode: every round of both distributed loops is a reliable
+    // checkpoint() into the checkpoint dir
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    try {
+      spark.sparkContext.setCheckpointDir(dir.toString)
+      check(big, onDriver = false, reliable = true)
+      val written = java.nio.file.Files.walk(dir)
+      try assert(written.anyMatch(_.getFileName.toString.startsWith("part-")),
+        "reliable rounds wrote no checkpoint files")
+      finally written.close()
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
+
+  test("HashMin CC above the driver bound still throws when maxIters runs out") {
+    // a 40000-node path (79998 symmetric rows) takes the distributed loop
+    val path = (1L until 40000L).map(i => (i, i + 1)).toDF("d1", "d2")
+    val e = intercept[IllegalStateException] {
+      graft.operators.Graph.connectedComponents(path, "d1", "d2", maxIters = 3)
+    }
+    assert(e.getMessage.startsWith("connectedComponents did not converge in 3 rounds"))
+  }
+
   test("salt-split LSH equals the uncapped pair set for ANY corpus and cap") {
     // the q350 losslessness LAW, not just its three fixtures: over random
     // vector corpora (clustered near-dup families + noise, so buckets of

@@ -1,12 +1,19 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate (dev tool, not part of
-the library): run graft.Verify at a given SF, then execute each oracle SQL
-in DuckDB over the same parquet tables and compare row counts, schemas, and
-value hashes (rows sorted, columns sorted by name).
+the library): after graft.Verify has dumped its results for a given SF into
+outDir, execute each oracle SQL in DuckDB over the same parquet tables and
+compare row counts, schemas, and value hashes (rows sorted, columns sorted
+by name).
+
+DuckDB runs under a memory limit of a third of the host's MemTotal (a test
+JVM started alongside takes up to half) and spills to a temp directory under
+outDir, capped at half the free disk there. An oracle that needs more is
+reported as a named FAIL ("oracle does not fit this host"), not killed by the
+kernel and not left to fill the disk.
 
 Usage: python3 tools/check.py [sfDir] [outDir]
 """
-import json, math, subprocess, sys, os
+import json, math, shutil, sys, os
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
@@ -34,9 +41,29 @@ def table_hash(rows, cols):
     return h.hexdigest()
 
 
+def mem_total_bytes():
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) * 1024
+    raise RuntimeError("no MemTotal in /proc/meminfo")
+
+
+def connect(tmp):
+    import duckdb
+    os.makedirs(tmp, exist_ok=True)
+    con = duckdb.connect()
+    con.execute(f"SET memory_limit = '{mem_total_bytes() // 3 // 2**20}MiB'")
+    con.execute(f"SET temp_directory = '{tmp}'")
+    spill = shutil.disk_usage(tmp).free // 2
+    con.execute(f"SET max_temp_directory_size = '{spill // 2**20}MiB'")
+    return con
+
+
 def main():
     import duckdb
-    con = duckdb.connect()
+    tmp = f"{OUT}/duckdb_tmp"
+    con = connect(tmp)
     for t in TABLES:
         p = f"{SF}/{t}.parquet"
         if os.path.exists(p):
@@ -55,6 +82,11 @@ def main():
             grows, gcols = got.fetchall(), [d[0] for d in got.description]
             exp = con.execute(sql)
             erows, ecols = exp.fetchall(), [d[0] for d in exp.description]
+        except duckdb.OutOfMemoryException as e:
+            print(f"FAIL {name}: oracle does not fit this host: "
+                  f"{str(e).splitlines()[0]}")
+            fails.append(name)
+            continue
         except Exception as e:
             print(f"FAIL {name}: {e}")
             fails.append(name)
@@ -80,6 +112,8 @@ def main():
                     if a != b:
                         print(f"     spark: {a}\n     duck : {b}")
                         break
+    con.close()
+    shutil.rmtree(tmp, ignore_errors=True)
     print(f"\n{len(oracle) - len(fails)}/{len(oracle)} queries match")
     sys.exit(1 if fails else 0)
 
