@@ -16,6 +16,12 @@ import org.apache.spark.sql.SparkSession
  *  - nanosAsLong: the testdata events table stores TIMESTAMP(NANOS),
  *    which Spark only reads as a raw long (converted to a real timestamp
  *    in Sources.events).
+ *  - `file:` through [[graft.sources.InProcessRawLocalFileSystem]]: with no
+ *    native libhadoop, Hadoop's stock local file system starts a `chmod`
+ *    process per file created and a `readlink` process per FileContext
+ *    rename path, a few ms each, on every Parquet write and every
+ *    streaming checkpoint file. The replacement does both in process and
+ *    keeps modes, `.crc` sidecars and results as they were.
  */
 object GraftSession {
 
@@ -55,6 +61,10 @@ object GraftSession {
       // amount from one JVM to the next.
       .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.GraftLocalFs].getName)
 
   /** A local session on `cores` threads: `SPARK_GRAFT_CPUS` when set, else
     * the host's available processors. */

@@ -1443,4 +1443,43 @@ class PlanShapeSpec extends SparkSpec {
     // not be compiled into code: each would be a fresh class every cycle
     assert(fresh == 0, s"the second cycle compiled $fresh new classes")
   }
+
+  test("local writes start no chmod or readlink process: Gold write, Silver append, stream batch") {
+    import java.util.concurrent.atomic.AtomicLong
+    import org.apache.spark.api.java.function.VoidFunction2
+    import org.apache.spark.sql.Dataset
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.sources.Sinks
+    import graft.streaming.Streaming
+    import LocalFileSystemSpec.{processStarts, program}
+    val landing = tmpDir("plan_spawn_in")
+    val warehouse = tmpDir("plan_spawn")
+    val stream = tmpDir("plan_spawn_stream")
+    Landing.injectPoll(landing, PipelineSpec.poll0, PipelineSpec.t0)
+    val docs = spark.read.parquet(s"$sf/documents.parquet").limit(20)
+    docs.write.parquet(s"$stream/docs")
+    val emitted = new AtomicLong()
+    val sink = new VoidFunction2[Dataset[Streaming.BucketClaim], java.lang.Long] {
+      def call(ds: Dataset[Streaming.BucketClaim], id: java.lang.Long): Unit =
+        emitted.addAndGet(ds.count())
+    }
+    val (commands, _) = processStarts {
+      Sinks.writeAnalysis(Seq((1, "a")).toDF("k", "v"),
+        s"$warehouse/gold/spawn_history", s"$warehouse/gold/spawn", "spawn", spark)
+      new graft.Pipeline(spark, warehouse).bronzeToSilver(landing, "2025-05-24 05:00:00")
+      Streaming.lshBucketClaimStream(
+          spark.readStream.schema(docs.schema).parquet(s"$stream/docs"),
+          "doc_id", "text")
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", s"$stream/checkpoint")
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    }
+    assert(spark.read.parquet(s"$warehouse/gold/spawn_history").count() == 1)
+    assert(spark.read.parquet(s"$warehouse/silver/assats_list").count() == 4)
+    assert(emitted.get > 0, "the stream ran no batch")
+    val forks = commands.map(program).filter(Set("chmod", "readlink"))
+    info(s"processes started: ${commands.groupBy(program).map { case (k, v) => s"$k ${v.size}" }}")
+    // the stock local file system started 70 chmod and 112 readlink here
+    assert(forks.size == 0, commands.take(5).mkString("\n"))
+  }
 }
