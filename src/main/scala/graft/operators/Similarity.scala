@@ -237,25 +237,9 @@ object Similarity {
                                  vecCol: String, threshold: Double,
                                  nTables: Int = 4, planesPerTable: Int = 4,
                                  dims: Int = 64): DataFrame =
-    verifiedPairsFromSigs(embeddings, idCol, vecCol, threshold,
-      lshSignaturesMulti(embeddings, idCol, vecCol, nTables, planesPerTable,
-        dims))
-
-  /** Candidate self-join + exact-cosine verify over a prepared
-    * (id, tbl, sig) signature table — shared by the uncapped and capped
-    * bucketed paths so both ride the identical plan machinery. */
-  private def verifiedPairsFromSigs(embeddings: DataFrame, idCol: String,
-                                    vecCol: String, threshold: Double,
-                                    sigs: DataFrame): DataFrame = {
-    // shuffle_hash: both sides are |corpus|×L signature rows keyed by
-    // (tbl, sig) — partition-local hash join, never a broadcast
-    val cand = sigs.select(col(idCol).as("d1"), col("tbl"), col("sig"))
-      .join(sigs.select(col(idCol).as("d2"), col("tbl"), col("sig"))
-        .hint("shuffle_hash"), Seq("tbl", "sig"))
-      .filter(col("d1") < col("d2"))
-      .select("d1", "d2").distinct()
-    verifyCandidatePairs(embeddings, idCol, vecCol, threshold, cand)
-  }
+    verifyCandidatePairs(embeddings, idCol, vecCol, threshold,
+      Buckets.selfPairs(lshSignaturesMulti(embeddings, idCol, vecCol,
+        nTables, planesPerTable, dims), idCol, Buckets.VectorTables))
 
   /** The exact-cosine verify stage over a prepared DISTINCT (d1, d2)
     * candidate table: re-joins the vectors by id (narrow corpus
@@ -282,12 +266,11 @@ object Similarity {
   def lshBucketSizes(embeddings: DataFrame, idCol: String, vecCol: String,
                      nTables: Int = 4, planesPerTable: Int = 4,
                      dims: Int = 64): DataFrame =
-    lshSignaturesMulti(embeddings, idCol, vecCol, nTables, planesPerTable,
-        dims)
-      // tbl widened to BIGINT: the census is a REPORTED surface and the
-      // oracle's integer-division table index is 64-bit
-      .groupBy(col("tbl").cast(LongType).as("tbl"), col("sig"))
-      .agg(count(lit(1)).as("bucket_size"))
+    // tbl widened to BIGINT: the census is a REPORTED surface and the
+    // oracle's integer-division table index is 64-bit
+    Buckets.census(lshSignaturesMulti(embeddings, idCol, vecCol, nTables,
+        planesPerTable, dims).withColumn("tbl", col("tbl").cast(LongType)),
+      Buckets.VectorTables)
 
   /** The EXPLICIT exclusion report for
     * [[cosineNearDupPairsBucketedCapped]]: every (tbl, sig) bucket the
@@ -335,15 +318,10 @@ object Similarity {
                                        maxBucket: Long, nTables: Int = 4,
                                        planesPerTable: Int = 4,
                                        dims: Int = 64): DataFrame = {
-    require(maxBucket >= 1, s"maxBucket=$maxBucket must be >= 1")
-    val sigs = lshSignaturesMulti(embeddings, idCol, vecCol, nTables,
-      planesPerTable, dims)
-    val keep = sigs.groupBy(col("tbl"), col("sig"))
-      .agg(count(lit(1)).as("graft_bs"))
-      .filter(col("graft_bs") <= maxBucket)
-      .select(col("tbl"), col("sig"))
-    val kept = sigs.join(broadcast(keep), Seq("tbl", "sig"))
-    verifiedPairsFromSigs(embeddings, idCol, vecCol, threshold, kept)
+    val kept = Buckets.dropCapped(lshSignaturesMulti(embeddings, idCol,
+      vecCol, nTables, planesPerTable, dims), Buckets.VectorTables, maxBucket)
+    verifyCandidatePairs(embeddings, idCol, vecCol, threshold,
+      Buckets.selfPairs(kept, idCol, Buckets.VectorTables))
   }
 
   /**
@@ -351,30 +329,14 @@ object Similarity {
    * open task): where [[cosineNearDupPairsBucketedCapped]] drops an
    * over-cap (tbl, sig) bucket whole — trading recall for the bound,
    * and on a real corpus hot buckets are precisely the most-duplicated
-   * content a dedup exists to catch — this variant SALT-SPLITS it into
-   * m = ⌈B/maxBucket⌉ sub-buckets (round-robin by rank-of-id, so every
-   * sub-bucket has ≤ maxBucket members by construction, not just in
-   * expectation) and emits ALL m² sub-bucket block pairs as candidate
-   * join keys. Every pair of the original bucket appears in exactly one
-   * (block_i, block_j) cell, so the candidate set — and therefore the
-   * verified pair set — is IDENTICAL to the uncapped
-   * [[cosineNearDupPairsBucketed]]'s. The cross-sub-bucket miss rate is
-   * exactly 0: unlike a diagonal-only salt split (which finds a random
-   * in-bucket pair with probability 1/m), the full block decomposition
-   * keeps recall lossless. q350 pins this: its DuckDB oracle is
-   * DELIBERATELY the UNCAPPED candidate computation, so the gate
-   * hash-verifies losslessness itself, not a replay of the split.
-   *
-   * What the split buys is not less total work — a bucket of B members
-   * still yields B(B−1)/2 verified pairs, which is irreducible when the
-   * PAIR SET is the contract — but a hard per-task bound: each block
-   * cell joins ≤ maxBucket × maxBucket rows, so the one-giant-partition
-   * failure mode (the straggler/OOM that AQE skew-split cannot fix,
-   * because it cannot split a single join KEY'S B² fan-out) is gone.
-   * Replication cost is bounded and linear-ish: each hot-bucket row is
-   * emitted m times per side (2·B²/cap rows per hot bucket into the
-   * join) — only hot rows pay it; under-cap buckets ride the plain
-   * single-key path untouched.
+   * content a dedup exists to catch — this variant splits it into
+   * m = ⌈B/maxBucket⌉ sub-buckets and joins ALL m² block cells: the
+   * lossless split of [[Buckets]], so the verified pair set is
+   * IDENTICAL to the uncapped [[cosineNearDupPairsBucketed]]'s (q350's
+   * DuckDB oracle is DELIBERATELY the uncapped computation) with a hard
+   * per-cell bound of maxBucket² rows. Only hot rows pay the
+   * replication (each is emitted m times per side); under-cap buckets
+   * ride the plain single-key path.
    *
    * Scale shape: census ≤ nTables·2^planesPerTable rows (broadcast);
    * the rank-of-id window partitions by (tbl, sig) over HOT-bucket rows
@@ -390,51 +352,11 @@ object Similarity {
                                           threshold: Double, maxBucket: Long,
                                           nTables: Int = 4,
                                           planesPerTable: Int = 4,
-                                          dims: Int = 64): DataFrame = {
-    require(maxBucket >= 1, s"maxBucket=$maxBucket must be >= 1")
-    val sigs = lshSignaturesMulti(embeddings, idCol, vecCol, nTables,
-      planesPerTable, dims)
-    val census = sigs.groupBy(col("tbl"), col("sig"))
-      .agg(count(lit(1)).as("graft_bs"))
-    val sized = sigs.join(broadcast(census), Seq("tbl", "sig"))
-    val cool = sized.filter(col("graft_bs") <= maxBucket)
-    val candCool = cool.select(col(idCol).as("d1"), col("tbl"), col("sig"))
-      .join(cool.select(col(idCol).as("d2"), col("tbl"), col("sig"))
-        .hint("shuffle_hash"), Seq("tbl", "sig"))
-      .filter(col("d1") < col("d2"))
-      .select("d1", "d2")
-    // hot rows: sub-bucket u = (rank-of-id − 1) mod m — deterministic,
-    // engine-portable (the oracle replays the same row_number), and
-    // round-robin so |sub-bucket| ≤ ⌈B/m⌉ ≤ maxBucket is a HARD bound
-    val m = col("graft_m")
-    val hot = sized.filter(col("graft_bs") > maxBucket)
-      .withColumn("graft_m",
-        call_function("div", col("graft_bs") + lit(maxBucket) - 1,
-          lit(maxBucket)).cast(LongType))
-      .withColumn("graft_u",
-        ((row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("tbl"), col("sig")).orderBy(col(idCol)))
-          - 1).cast(LongType) % m))
-    // block enumeration: the left row fixes block_i = its own sub-bucket
-    // and fans out over every block_j; the right row mirrors it — pair
-    // (x, y) meets at exactly (u_x, u_y), then d1 < d2 keeps one of the
-    // two ordered copies, exactly like the plain path's self-join
-    val hotL = hot
-      .withColumn("graft_bj", explode(sequence(lit(0L), m - 1)))
-      .select(col(idCol).as("d1"), col("tbl"), col("sig"),
-        col("graft_u").as("graft_bi"), col("graft_bj"))
-    val hotR = hot
-      .withColumn("graft_bi", explode(sequence(lit(0L), m - 1)))
-      .select(col(idCol).as("d2"), col("tbl"), col("sig"),
-        col("graft_bi"), col("graft_u").as("graft_bj"))
-    val candHot = hotL
-      .join(hotR.hint("shuffle_hash"),
-        Seq("tbl", "sig", "graft_bi", "graft_bj"))
-      .filter(col("d1") < col("d2"))
-      .select("d1", "d2")
-    val cand = candCool.unionByName(candHot).distinct()
-    verifyCandidatePairs(embeddings, idCol, vecCol, threshold, cand)
-  }
+                                          dims: Int = 64): DataFrame =
+    verifyCandidatePairs(embeddings, idCol, vecCol, threshold,
+      Buckets.selfPairs(lshSignaturesMulti(embeddings, idCol, vecCol,
+          nTables, planesPerTable, dims), idCol, Buckets.VectorTables,
+        split = Some(maxBucket)))
 
   // ── stored ANN signature index (incremental embedding dedup) ──────────
 
@@ -448,15 +370,11 @@ object Similarity {
    * the indexed corpus; the corpus embedding table itself is the other
    * stored half (verification joins it by id).
    *
-   * `maxBucket` pre-splits hot signature buckets AT BUILD TIME: each
-   * index row gains its sub-bucket id `graft_u` = (rank-of-id − 1) mod
-   * m and the bucket's split count `graft_m` = ⌈B/cap⌉, so every
-   * (tbl, sig, graft_u) cell holds ≤ cap index rows — the hot buckets
-   * of a 100 TB embedding index are exactly its most-duplicated
-   * content, and splitting once at build time bounds EVERY future
-   * batch's collision join ([[dedupAgainstAnnIndex]] runs the census →
-   * explode ≤ m → block join; candidates IDENTICAL to uncapped —
-   * q375's oracle is the uncapped chain).
+   * `maxBucket` pre-splits hot signature buckets AT BUILD TIME
+   * ([[Buckets.splitIndex]]), so every (tbl, sig, graft_u) cell holds
+   * ≤ cap index rows — the hot buckets of a 100 TB embedding index are
+   * exactly its most-duplicated content, and splitting once at build
+   * time bounds EVERY future batch's collision join.
    */
   def annIndex(corpus: DataFrame, idCol: String, vecCol: String,
                nTables: Int = 4, planesPerTable: Int = 4,
@@ -464,21 +382,7 @@ object Similarity {
                maxBucket: Option[Long] = None): DataFrame = {
     val sigs = lshSignaturesMulti(corpus, idCol, vecCol, nTables,
       planesPerTable, dims)
-    maxBucket match {
-      case None => sigs
-      case Some(cap) =>
-        require(cap >= 1, s"maxBucket=$cap must be >= 1")
-        val wspec = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("tbl"), col("sig"))
-        sigs
-          .withColumn("graft_m",
-            call_function("div",
-              count(lit(1)).over(wspec) + lit(cap) - 1, lit(cap))
-              .cast(LongType))
-          .withColumn("graft_u",
-            (row_number().over(wspec.orderBy(col(idCol))) - 1)
-              .cast(LongType) % col("graft_m"))
-    }
+    maxBucket.fold(sigs)(Buckets.splitIndex(sigs, idCol, Buckets.VectorTables, _))
   }
 
   /**
@@ -491,39 +395,22 @@ object Similarity {
    * O(|batch| + collisions), bit-identical to what a batch-global run
    * reports for the same (new, old) pairs.
    *
-   * A cap-split index (annIndex(maxBucket) — carries graft_u/graft_m)
-   * is exploited transparently with the q362 block join: the batch row
-   * picks up the bucket's m from the census — which here is METADATA by
-   * construction (≤ nTables · 2^planesPerTable occupied buckets,
-   * unlike the text path's corpus-scale band-hash census) so it rides a
-   * broadcast — explodes over the m sub-buckets, and meets the index on
-   * (tbl, sig, graft_u) where the index side holds ≤ cap rows per cell
-   * by build-time construction. Every colliding (new, old) pair meets
-   * exactly once per shared table, so the candidate set is IDENTICAL to
-   * the uncapped join's — q375's oracle is the UNCAPPED chain,
-   * hash-green = losslessness.
+   * The collision join is [[Buckets.probeIndex]]: a cap-split index
+   * (annIndex(maxBucket)) is probed with the block join, its census
+   * (metadata: ≤ nTables · 2^planesPerTable buckets) broadcast, and the
+   * candidate set is IDENTICAL to the uncapped join's — q375's oracle
+   * is the UNCAPPED chain.
    */
   def dedupAgainstAnnIndex(batch: DataFrame, idCol: String, vecCol: String,
                            indexSigs: DataFrame, corpus: DataFrame,
                            threshold: Double,
                            nTables: Int = 4, planesPerTable: Int = 4,
                            dims: Int = 64): DataFrame = {
-    val nb = lshSignaturesMulti(batch, idCol, vecCol, nTables,
-        planesPerTable, dims)
-      .select(col(idCol).as("d_new"), col("tbl"), col("sig"))
-    val cand = (if (!indexSigs.columns.contains("graft_m")) {
-      nb.join(indexSigs.select(col(idCol).as("d_old"), col("tbl"),
-          col("sig")).hint("shuffle_hash"), Seq("tbl", "sig"))
-    } else {
-      val census = indexSigs.select(col("tbl"), col("sig"), col("graft_m"))
-        .distinct()
-      nb.join(broadcast(census), Seq("tbl", "sig"))
-        .withColumn("graft_u",
-          explode(sequence(lit(0L), col("graft_m") - 1)))
-        .join(indexSigs.select(col(idCol).as("d_old"), col("tbl"),
-            col("sig"), col("graft_u")).hint("shuffle_hash"),
-          Seq("tbl", "sig", "graft_u"))
-    }).select("d_new", "d_old").distinct()
+    val cand = Buckets.probeIndex(
+        lshSignaturesMulti(batch, idCol, vecCol, nTables, planesPerTable,
+          dims).select(col(idCol).as("d_new"), col("tbl"), col("sig")),
+        indexSigs, Buckets.VectorTables, col(idCol).as("d_old"))
+      .select("d_new", "d_old").distinct()
     val a = batch.select(col(idCol).as("d_new"), col(vecCol).as("graft_v1"))
     val b = corpus.select(col(idCol).as("d_old"), col(vecCol).as("graft_v2"))
     cand.join(a.hint("shuffle_hash"), "d_new")

@@ -46,92 +46,22 @@ object TextDedup {
   private def md5Word32(salt: String, input: Column): Column =
     conv(substring(md5(concat(lit(salt), input)), 1, 8), 16, 10).cast(LongType)
 
-  /** Candidate pairs (d1 < d2) sharing at least one LSH band.
+  /** Candidate pairs (d1 < d2) sharing at least one LSH band: the
+    * [[Buckets.selfPairs]] self-join on (band, bh).
     *
-    * `maxBucket` is the HOT-BUCKET policy (the r16 verdict's top task —
-    * the port of [[Similarity.cosineNearDupPairsBucketedSaltSplit]]'s
-    * lossless salt split to the text path): a (band, bh) bucket of B
-    * members funnels its B² fan-out through ONE join key, the exact
-    * single-key shape BENCH_SCALING measured at ×9.25 vs ×3.4 on the
-    * embedding twin — and on a real corpus the hot band buckets are
-    * precisely the most-duplicated content a dedup exists to catch, so
-    * DROPPING them (the df-cap trade) is the wrong default here. With
-    * `maxBucket = Some(cap)`, over-cap buckets are round-robin split by
-    * rank-of-id into m = ⌈B/cap⌉ sub-buckets and ALL m² (block_i,
-    * block_j) cells are joined: every pair of the original bucket meets
-    * in exactly one cell, so the candidate set — and the verified pair
-    * set downstream — is IDENTICAL to the uncapped path's (q358's
-    * DuckDB oracle is deliberately the UNCAPPED q19 computation, so
-    * hash-green IS the losslessness proof; PropertySpec holds the
-    * any-corpus/any-cap pair-set-equality law). What the split buys is
-    * not less total work — B members still owe B(B−1)/2 pairs — but a
-    * hard per-join-cell bound of cap² rows, turning the one-giant-key
-    * straggler/OOM that AQE cannot split (it cannot divide a single
-    * key's fan-out) into ⌈B/cap⌉² schedulable cells. Under-cap buckets
-    * ride the plain single-key join untouched; `None` (the default all
-    * 23 existing call sites pin) is byte-identical to the pre-r17 path.
-    *
-    * Scale shape of the capped path: bucket size + rank-of-id come from
-    * ONE window over (band, bh) — per-partition sort is O(B log B),
-    * noise next to the B²/2 pairs the bucket then generates. The census
-    * is NOT broadcast (unlike the embedding twin, whose signature space
-    * is nTables·2^planes metadata rows, a text band-hash census is
-    * |docs|×bands — corpus-scale). */
+    * `maxBucket` is the HOT-BUCKET policy: on a real corpus the hot band
+    * buckets are precisely the most-duplicated content a dedup exists to
+    * catch, so DROPPING them (the df-cap trade) is the wrong default
+    * here. With `maxBucket = Some(cap)`, over-cap buckets are split into
+    * ⌈B/cap⌉ sub-buckets and every block cell is joined — the candidate
+    * set is IDENTICAL to the uncapped path's (the lossless split, see
+    * [[Buckets]]; q358's oracle is the uncapped q19 computation), with a
+    * hard bound of cap² rows per join cell. `None` (the default) is the
+    * plain single-key join. The text census is corpus-scale, so bucket
+    * sizes come from a window over (band, bh), never a broadcast. */
   def lshCandidates(bands: DataFrame, idCol: String,
-                    maxBucket: Option[Long] = None): DataFrame = {
-    val plain = {
-      val a = bands.select(col(idCol).as("d1"), col("band"), col("bh"))
-      val b = bands.select(col(idCol).as("d2"), col("band"), col("bh"))
-      // shuffle_hash: never materialize the band table as a broadcast
-      // HashedRelation — both sides are |docs|×bands and partition cleanly
-      a.join(b.hint("shuffle_hash"), Seq("band", "bh"))
-        .filter(col("d1") < col("d2"))
-        .select("d1", "d2").distinct()
-    }
-    maxBucket match {
-      case None => plain
-      case Some(cap) =>
-        require(cap >= 1, s"maxBucket=$cap must be >= 1")
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("band"), col("bh"))
-        val sized = bands
-          .withColumn("graft_bs", count(lit(1)).over(w))
-          .withColumn("graft_rn",
-            row_number().over(w.orderBy(col(idCol))))
-        val cool = sized.filter(col("graft_bs") <= cap)
-        val candCool = cool.select(col(idCol).as("d1"), col("band"), col("bh"))
-          .join(cool.select(col(idCol).as("d2"), col("band"), col("bh"))
-            .hint("shuffle_hash"), Seq("band", "bh"))
-          .filter(col("d1") < col("d2"))
-          .select("d1", "d2")
-        // sub-bucket u = (rank-of-id − 1) mod m — round-robin, so
-        // |sub-bucket| ≤ ⌈B/m⌉ ≤ cap is a HARD bound, not expectation
-        val m = col("graft_m")
-        val hot = sized.filter(col("graft_bs") > cap)
-          .withColumn("graft_m",
-            call_function("div", col("graft_bs") + lit(cap) - 1, lit(cap))
-              .cast(LongType))
-          .withColumn("graft_u", (col("graft_rn") - 1).cast(LongType) % m)
-        // block enumeration: a left row fixes block_i = its own
-        // sub-bucket and fans out over every block_j; the right row
-        // mirrors it — pair (x, y) meets at exactly (u_x, u_y), then
-        // d1 < d2 keeps one ordered copy, like the plain self-join
-        val hotL = hot
-          .withColumn("graft_bj", explode(sequence(lit(0L), m - 1)))
-          .select(col(idCol).as("d1"), col("band"), col("bh"),
-            col("graft_u").as("graft_bi"), col("graft_bj"))
-        val hotR = hot
-          .withColumn("graft_bi", explode(sequence(lit(0L), m - 1)))
-          .select(col(idCol).as("d2"), col("band"), col("bh"),
-            col("graft_bi"), col("graft_u").as("graft_bj"))
-        val candHot = hotL
-          .join(hotR.hint("shuffle_hash"),
-            Seq("band", "bh", "graft_bi", "graft_bj"))
-          .filter(col("d1") < col("d2"))
-          .select("d1", "d2")
-        candCool.unionByName(candHot).distinct()
-    }
-  }
+                    maxBucket: Option[Long] = None): DataFrame =
+    Buckets.selfPairs(bands, idCol, Buckets.TextBands, split = maxBucket)
 
   /** |A∩B| for candidate (d1, d2) pairs: one pass over the shingle
     * inverted index, restricted to candidates BEFORE the count aggregation
@@ -654,47 +584,9 @@ object TextDedup {
       .select(col("d1"), col("d2"), col("edit_dist"))
   }
 
-  /**
-   * Hamming-distance near-dup pairs over a packed bit-hash column
-   * (SimHash, image pHash, any bit signature): all pairs within
-   * `maxDist` differing bits. Candidate generation is pigeonhole
-   * banding — the hash splits into `bands` disjoint bit slices, and a
-   * pair differing in at most bands−1 bits MUST agree on some slice, so
-   * for `maxDist ≤ bands − 1` recall is EXACT, not probabilistic
-   * (Manku et al., "Detecting near-duplicates for web crawling",
-   * WWW'07 — simhash dedup at crawl scale). Collisions are equi-joins
-   * on (slice, value); verification is one codegen'd bit_count(xor) per
-   * candidate — no pairwise scan anywhere.
-   */
-  /** `maxBucket` applies the q358 salt-split to the (slice, value)
-    * self-join — an over-cap pigeonhole bucket (identical or
-    * near-identical signatures: precisely the dup-heavy content) is
-    * round-robin split and ALL block cells joined, pair set IDENTICAL
-    * to uncapped (q363's oracle is the uncapped q109 chain; the cap
-    * engages on the fixture). Default `None` is byte-identical to the
-    * pre-r17 path.
-    *
-    * WHEN TO USE IT (measured, BENCH_SCALING_r17): the split is a SKEW
-    * remedy — a few giant buckets among many (one boilerplate cluster
-    * dominating a slice value). A pigeonhole space that is UNIFORMLY
-    * dense (small sliceBits ⇒ few distinct values, every bucket ~n/2^s
-    * members) has no skew to fix: the keys already saturate the
-    * cluster's parallelism and the split pays ⌈B/cap⌉× row replication
-    * for nothing (q363 measured ×33 vs uncapped ×20 at 5× on exactly
-    * that shape). There, widen the slices — [[simHashWide]] at 60 bits
-    * gives 2¹⁵ values per band vs 2⁸, gated as q371 — AND cap by
-    * DROPPING with an exclusion report
-    * ([[hammingPairsDropCap]]/[[hammingExcludedBuckets]], q372/q373),
-    * or dedup by cluster representative. Measured (BENCH_SCALING_r18,
-    * sharedBands, vs ×5/×10 linear): widening alone ×7.46 (output still
-    * quadratic in replication — any lossless generator's floor);
-    * widened + drop-cap ×2.35–×3.3 at both densification points ONCE
-    * THE CAP SITS BELOW THE DUPLICATION MULTIPLICITY (cap 12 at 5×
-    * replication read ×4.46 — kept ≤ cap buckets still pay their
-    * (5B)² pair output; cap 8 read ×2.35). */
   /** One row per (id, hash, slice, slice-value): the pigeonhole banding
-    * shared by [[hammingPairs]], [[hammingPairsDropCap]] and
-    * [[hammingExcludedBuckets]]. */
+    * of every Hamming operator — the hash splits into `bands` disjoint
+    * bit slices, keyed (sl, sv). */
   private[graft] def hammingSliceRows(df: DataFrame, idCol: String,
                                       hashCol: String, bits: Int,
                                       bands: Int): DataFrame = {
@@ -710,75 +602,68 @@ object TextDedup {
         col("s.sl").as("sl"), col("s.sv").as("sv"))
   }
 
+  /** The slice rows a Hamming self-join scans, hash carried as
+    * `graft_h`, with an EAGER lineage cut (r21): the two self-join sides
+    * (and a census) each scan them, and the d1/d2 renames defeat
+    * ReusedExchange, so without the cut the whole hash chain (for
+    * SimHash: word explode → `bits` bit-sums, the expensive part) ran
+    * once per scan. The materialized slice table is what a production
+    * deployment would store as the index anyway. */
+  private def cutSliceRows(df: DataFrame, idCol: String, hashCol: String,
+                           bits: Int, bands: Int): DataFrame =
+    hammingSliceRows(df, idCol, hashCol, bits, bands)
+      .select(col(idCol), col(hashCol).as("graft_h"), col("sl"), col("sv"))
+      .localCheckpoint()
+
+  /** Candidates with `hamming` = popcount(graft_h1 xor graft_h2) ≤
+    * `maxDist`: one codegen'd bit_count per candidate. */
+  private[graft] def withinHamming(cand: DataFrame, maxDist: Int): DataFrame =
+    cand.withColumn("hamming",
+        bit_count(col("graft_h1").bitwiseXOR(col("graft_h2"))))
+      .filter(col("hamming") <= maxDist)
+
+  /**
+   * Hamming-distance near-dup pairs over a packed bit-hash column
+   * (SimHash, image pHash, any bit signature): all pairs within
+   * `maxDist` differing bits. Candidate generation is pigeonhole
+   * banding ([[hammingSliceRows]]): a pair differing in at most
+   * bands−1 bits MUST agree on some slice, so for `maxDist ≤ bands − 1`
+   * recall is EXACT, not probabilistic (Manku et al., "Detecting
+   * near-duplicates for web crawling", WWW'07 — simhash dedup at crawl
+   * scale). Collisions are the [[Buckets.selfPairs]] equi-join on
+   * (slice, value); verification is one bit_count(xor) per candidate.
+   *
+   * `maxBucket` applies the lossless split of [[Buckets]] to the
+   * (slice, value) self-join: pair set IDENTICAL to uncapped (q363's
+   * oracle is the uncapped q109 chain; the cap engages on the fixture).
+   *
+   * WHEN TO USE IT (measured, BENCH_SCALING_r17): the split is a SKEW
+   * remedy — a few giant buckets among many (one boilerplate cluster
+   * dominating a slice value). A pigeonhole space that is UNIFORMLY
+   * dense (small sliceBits ⇒ few distinct values, every bucket ~n/2^s
+   * members) has no skew to fix: the keys already saturate the
+   * cluster's parallelism and the split pays ⌈B/cap⌉× row replication
+   * for nothing (q363 measured ×33 vs uncapped ×20 at 5× on exactly
+   * that shape). There, widen the slices — [[simHashWide]] at 60 bits
+   * gives 2¹⁵ values per band vs 2⁸, gated as q371 — AND cap by
+   * DROPPING with an exclusion report
+   * ([[hammingPairsDropCap]]/[[hammingExcludedBuckets]], q372/q373),
+   * or dedup by cluster representative. Measured (BENCH_SCALING_r18,
+   * sharedBands, vs ×5/×10 linear): widening alone ×7.46 (output still
+   * quadratic in replication — any lossless generator's floor);
+   * widened + drop-cap ×2.35–×3.3 at both densification points ONCE
+   * THE CAP SITS BELOW THE DUPLICATION MULTIPLICITY (cap 12 at 5×
+   * replication read ×4.46 — kept ≤ cap buckets still pay their
+   * (5B)² pair output; cap 8 read ×2.35).
+   */
   def hammingPairs(df: DataFrame, idCol: String, hashCol: String,
                    bits: Int, bands: Int, maxDist: Int,
                    maxBucket: Option[Long] = None): DataFrame = {
     require(maxDist <= bands - 1,
       s"pigeonhole recall needs maxDist <= bands-1 (= ${bands - 1})")
-    // r21: EAGER lineage cuts — the multi-scan frame differs per path,
-    // but in both the d1/d2 renames defeat ReusedExchange, so without a
-    // cut the whole simHash chain (word explode → `bits` bit-sums, the
-    // expensive part) executed once per scan: twice uncapped, FOUR
-    // times capped (cool ×2 + hotL + hotR, each with the double window
-    // on top). The materialized slice table is what a production
-    // deployment would store as the index anyway.
-    val sl = hammingSliceRows(df, idCol, hashCol, bits, bands)
-    val cand = (maxBucket match {
-      case None =>
-        // uncapped: the self-join scans the slice rows from both sides
-        val slc = sl.localCheckpoint()
-        slc.select(col(idCol).as("d1"), col(hashCol).as("graft_h1"),
-            col("sl"), col("sv"))
-          .join(slc.select(col(idCol).as("d2"), col(hashCol).as("graft_h2"),
-            col("sl"), col("sv")).hint("shuffle_hash"), Seq("sl", "sv"))
-          .filter(col("d1") < col("d2"))
-      case Some(cap) =>
-        require(cap >= 1, s"maxBucket=$cap must be >= 1")
-        val wspec = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("sl"), col("sv"))
-        // capped: `sized` (chain + double window) is the 4-scan frame;
-        // sl itself is consumed only once (by sized), so only sized is
-        // cut
-        val sized = sl
-          .withColumn("graft_bs", count(lit(1)).over(wspec))
-          .withColumn("graft_rn",
-            row_number().over(wspec.orderBy(col(idCol))))
-          .localCheckpoint()
-        val cool = sized.filter(col("graft_bs") <= cap)
-        val candCool = cool.select(col(idCol).as("d1"),
-            col(hashCol).as("graft_h1"), col("sl"), col("sv"))
-          .join(cool.select(col(idCol).as("d2"),
-            col(hashCol).as("graft_h2"), col("sl"), col("sv"))
-            .hint("shuffle_hash"), Seq("sl", "sv"))
-          .filter(col("d1") < col("d2"))
-        val m = col("graft_m")
-        val hot = sized.filter(col("graft_bs") > cap)
-          .withColumn("graft_m",
-            call_function("div", col("graft_bs") + lit(cap) - 1, lit(cap))
-              .cast(LongType))
-          .withColumn("graft_u", (col("graft_rn") - 1).cast(LongType) % m)
-        val hotL = hot
-          .withColumn("graft_bj", explode(sequence(lit(0L), m - 1)))
-          .select(col(idCol).as("d1"), col(hashCol).as("graft_h1"),
-            col("sl"), col("sv"),
-            col("graft_u").as("graft_bi"), col("graft_bj"))
-        val hotR = hot
-          .withColumn("graft_bi", explode(sequence(lit(0L), m - 1)))
-          .select(col(idCol).as("d2"), col(hashCol).as("graft_h2"),
-            col("sl"), col("sv"),
-            col("graft_bi"), col("graft_u").as("graft_bj"))
-        val candHot = hotL
-          .join(hotR.hint("shuffle_hash"),
-            Seq("sl", "sv", "graft_bi", "graft_bj"))
-          .filter(col("d1") < col("d2"))
-          .select("d1", "d2", "graft_h1", "graft_h2")
-        candCool.select("d1", "d2", "graft_h1", "graft_h2")
-          .unionByName(candHot)
-    }).select("d1", "d2", "graft_h1", "graft_h2").distinct()
-    cand
-      .withColumn("hamming",
-        bit_count(col("graft_h1").bitwiseXOR(col("graft_h2"))))
-      .filter(col("hamming") <= maxDist)
+    withinHamming(Buckets.selfPairs(
+        cutSliceRows(df, idCol, hashCol, bits, bands), idCol,
+        Buckets.HammingSlices, Seq("graft_h"), maxBucket), maxDist)
       .select(col("d1"), col("d2"), col("hamming"))
   }
 
@@ -786,15 +671,16 @@ object TextDedup {
    * Drop-cap Hamming pairs — the BOUNDED-VOLUME policy for the
    * pigeonhole join (the q338/q346 embedding pattern on (slice, value)):
    * slice buckets holding more than `maxBucket` members are EXCLUDED
-   * from candidate generation entirely, so per-bucket fan-out is ≤ cap²
-   * by construction and total candidate volume is bounded regardless of
-   * signature density. This is the [[hammingPairs]] scale doc's remedy
-   * for a UNIFORMLY dense slice space, where the lossless salt-split is
-   * pure replication (q363's measured negative): a near-saturated
-   * bucket pairs everything with everything — precisely the candidates
-   * a Hamming verifier then rejects almost wholesale (members agree on
-   * ONE slice by bucket construction; with the space saturated that
-   * agreement is chance, not similarity).
+   * from candidate generation entirely ([[Buckets.dropCapped]]), so
+   * per-bucket fan-out is ≤ cap² by construction and total candidate
+   * volume is bounded regardless of signature density. This is the
+   * [[hammingPairs]] scale doc's remedy for a UNIFORMLY dense slice
+   * space, where the lossless salt-split is pure replication (q363's
+   * measured negative): a near-saturated bucket pairs everything with
+   * everything — precisely the candidates a Hamming verifier then
+   * rejects almost wholesale (members agree on ONE slice by bucket
+   * construction; with the space saturated that agreement is chance,
+   * not similarity).
    *
    * Recall contract (deterministic, replayed by the q372 oracle): a
    * pair is emitted iff it verifies AND agrees on at least one
@@ -808,38 +694,22 @@ object TextDedup {
                           maxBucket: Long): DataFrame = {
     require(maxDist <= bands - 1,
       s"pigeonhole recall needs maxDist <= bands-1 (= ${bands - 1})")
-    require(maxBucket >= 1, s"maxBucket=$maxBucket must be >= 1")
-    val sl = hammingSliceRows(df, idCol, hashCol, bits, bands)
-    // r21: EAGER cut — `cool` is scanned from both self-join sides (the
-    // renames defeat ReusedExchange), re-running the simHash chain plus
-    // the bucket-size window once per side without it
-    val sized = sl.withColumn("graft_bs", count(lit(1)).over(
-      org.apache.spark.sql.expressions.Window
-        .partitionBy(col("sl"), col("sv"))))
-      .localCheckpoint()
-    val cool = sized.filter(col("graft_bs") <= maxBucket)
-    cool.select(col(idCol).as("d1"), col(hashCol).as("graft_h1"),
-        col("sl"), col("sv"))
-      .join(cool.select(col(idCol).as("d2"), col(hashCol).as("graft_h2"),
-        col("sl"), col("sv")).hint("shuffle_hash"), Seq("sl", "sv"))
-      .filter(col("d1") < col("d2"))
-      .select("d1", "d2", "graft_h1", "graft_h2").distinct()
-      .withColumn("hamming",
-        bit_count(col("graft_h1").bitwiseXOR(col("graft_h2"))))
-      .filter(col("hamming") <= maxDist)
+    val kept = Buckets.dropCapped(
+      cutSliceRows(df, idCol, hashCol, bits, bands),
+      Buckets.HammingSlices, maxBucket)
+    withinHamming(Buckets.selfPairs(kept, idCol, Buckets.HammingSlices,
+        Seq("graft_h")), maxDist)
       .select(col("d1"), col("d2"), col("hamming"))
   }
 
   /** Full slice-bucket census (sl, sv, bucket_size) — the measurement
     * behind the Hamming family's config choice, published un-filtered
     * (the ≥ 2 tail feeds [[graft.operators.Profiling.dedupPolicyAudit]];
-    * [[hammingExcludedBuckets]] is this census cut at the cap). One
-    * map-side-combinable hash-agg over the slice rows. */
+    * [[hammingExcludedBuckets]] is this census cut at the cap). */
   def hammingBucketSizes(df: DataFrame, idCol: String, hashCol: String,
                          bits: Int, bands: Int): DataFrame =
-    hammingSliceRows(df, idCol, hashCol, bits, bands)
-      .groupBy(col("sl"), col("sv"))
-      .agg(count(lit(1)).as("bucket_size"))
+    Buckets.census(hammingSliceRows(df, idCol, hashCol, bits, bands),
+      Buckets.HammingSlices)
 
   /** Band-bucket census (band, bh, bucket_size) for the MinHash LSH
     * path — the text-side input to
@@ -848,9 +718,8 @@ object TextDedup {
     * only come from content replication, never hash saturation). */
   def lshBandBucketSizes(docs: DataFrame, idCol: String, textCol: String,
                          k: Int = 16, r: Int = 4, w: Int = 3): DataFrame =
-    bandsPerRow(docs, idCol, textCol, k, r, w)
-      .groupBy(col("band"), col("bh"))
-      .agg(count(lit(1)).as("bucket_size"))
+    Buckets.census(bandsPerRow(docs, idCol, textCol, k, r, w),
+      Buckets.TextBands)
 
   /** The slice buckets [[hammingPairsDropCap]] drops, as visible rows
     * (sl, sv, bucket_size) — the audit table a capped Hamming dedup run
@@ -860,47 +729,30 @@ object TextDedup {
                              hashCol: String, bits: Int, bands: Int,
                              maxBucket: Long): DataFrame = {
     require(maxBucket >= 1, s"maxBucket=$maxBucket must be >= 1")
-    hammingSliceRows(df, idCol, hashCol, bits, bands)
-      .groupBy(col("sl"), col("sv"))
-      .agg(count(lit(1)).as("bucket_size"))
+    hammingBucketSizes(df, idCol, hashCol, bits, bands)
       .filter(col("bucket_size") > maxBucket)
   }
 
   /**
    * Persisted slice index for incremental HAMMING dedup — the family's
-   * missing stored-index member (text has [[lshIndex]], embeddings have
-   * [[graft.operators.Similarity.annIndex]]; the Hamming/phash path had
-   * only self-join forms). One (id, hash, sl, sv) row per (signature,
-   * band slice), written once when the corpus is indexed; the full hash
-   * rides along because Hamming verification is a pure function of the
-   * two hashes (no second table needed, unlike text/embedding verify).
-   * On a real deployment the table is stored bucketed on (sl, sv) so
-   * incremental batches shuffle only themselves.
+   * stored-index member (text has [[lshIndex]], embeddings have
+   * [[graft.operators.Similarity.annIndex]]). One (id, hash, sl, sv) row
+   * per (signature, band slice), written once when the corpus is
+   * indexed; the full hash rides along because Hamming verification is
+   * a pure function of the two hashes (no second table needed, unlike
+   * text/embedding verify). On a real deployment the table is stored
+   * bucketed on (sl, sv) so incremental batches shuffle only themselves.
    *
-   * `maxBucket` pre-splits hot slice buckets AT BUILD TIME (the
-   * q362/q375 pattern): graft_u = (rank-of-id − 1) mod m round-robin,
-   * graft_m = ⌈B/cap⌉, so every (sl, sv, graft_u) cell holds ≤ cap
-   * index rows — a 100 TB index's hot slices are its exact-dup piles,
-   * split once for every future batch.
+   * `maxBucket` pre-splits hot slice buckets AT BUILD TIME
+   * ([[Buckets.splitIndex]]), so every (sl, sv, graft_u) cell holds
+   * ≤ cap index rows — a 100 TB index's hot slices are its exact-dup
+   * piles, split once for every future batch.
    */
   def hammingIndex(corpus: DataFrame, idCol: String, hashCol: String,
                    bits: Int, bands: Int,
                    maxBucket: Option[Long] = None): DataFrame = {
     val sl = hammingSliceRows(corpus, idCol, hashCol, bits, bands)
-    maxBucket match {
-      case None => sl
-      case Some(cap) =>
-        require(cap >= 1, s"maxBucket=$cap must be >= 1")
-        val wspec = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("sl"), col("sv"))
-        sl.withColumn("graft_m",
-            call_function("div",
-              count(lit(1)).over(wspec) + lit(cap) - 1, lit(cap))
-              .cast(LongType))
-          .withColumn("graft_u",
-            (row_number().over(wspec.orderBy(col(idCol))) - 1)
-              .cast(LongType) % col("graft_m"))
-    }
+    maxBucket.fold(sl)(Buckets.splitIndex(sl, idCol, Buckets.HammingSlices, _))
   }
 
   /**
@@ -911,21 +763,10 @@ object TextDedup {
    * hashes carried on the rows. Pigeonhole recall is EXACT for
    * `maxDist ≤ bands − 1` over (new, old) pairs: any pair within
    * maxDist agrees on at least one slice, and both sides slice the
-   * same way.
-   *
-   * A cap-split index (hammingIndex(maxBucket) — carries
-   * graft_u/graft_m) is exploited transparently with the q375 block
-   * join: the batch row picks up the bucket's m from the census —
-   * which is METADATA BY THE SPACE ITSELF here (occupied buckets
-   * ≤ bands · 2^(bits/bands): 1024 at the 32-bit config, ≤ 131k at
-   * 60-bit — bounded regardless of corpus size, the embedding-side
-   * asymmetry, NOT the text side's corpus-scale band census) so it
-   * rides a broadcast — explodes over the m sub-buckets, and meets the
-   * index on (sl, sv, graft_u) where the index holds ≤ cap rows per
-   * cell by build-time construction. Every colliding (new, old) pair
-   * meets exactly once per shared slice, so the candidate set is
-   * IDENTICAL to the uncapped join's — q383's oracle is the UNCAPPED
-   * chain, hash-green = losslessness.
+   * same way. The probe is [[Buckets.probeIndex]], as in the stream
+   * twin [[graft.streaming.Streaming.nearDupHammingCandidates]]; a
+   * cap-split index gives the IDENTICAL pair set (q383's oracle is the
+   * uncapped chain).
    */
   def dedupAgainstHammingIndex(batch: DataFrame, idCol: String,
                                hashCol: String, indexSlices: DataFrame,
@@ -933,71 +774,15 @@ object TextDedup {
                                maxDist: Int): DataFrame = {
     require(maxDist <= bands - 1,
       s"pigeonhole recall needs maxDist <= bands-1 (= ${bands - 1})")
-    hammingCandidateJoin(batch, idCol, hashCol, indexSlices, bits, bands,
-        indexHint = Some("shuffle_hash"), checkpointCensus = false)
-      .select(col(idCol).as("d_new"), col("d_old"),
-        col("graft_h1"), col("graft_h2"))
-      .distinct()
-      .withColumn("hamming",
-        bit_count(col("graft_h1").bitwiseXOR(col("graft_h2"))))
-      .filter(col("hamming") <= maxDist)
+    val cand = Buckets.probeIndex(
+        hammingSliceRows(batch, idCol, hashCol, bits, bands)
+          .select(col(idCol).as("d_new"), col(hashCol).as("graft_h1"),
+            col("sl"), col("sv")),
+        indexSlices, Buckets.HammingSlices,
+        col(idCol).as("d_old"), col(hashCol).as("graft_h2"))
+      .select("d_new", "d_old", "graft_h1", "graft_h2").distinct()
+    withinHamming(cand, maxDist)
       .select(col("d_new"), col("d_old"), col("hamming"))
-  }
-
-  /**
-   * The ONE copy of the new-side-vs-stored-Hamming-index candidate join,
-   * shared by [[dedupAgainstHammingIndex]] (batch) and
-   * [[graft.streaming.Streaming.nearDupHammingCandidates]] (stream) so
-   * the cap-split join semantics cannot drift between the twins (r19
-   * ADVICE). The two contract knobs that legitimately differ are
-   * PARAMETERS, not divergent copies:
-   *
-   *  - `indexHint`: batch hints `shuffle_hash` on the corpus-scale index
-   *    join (never a broadcast HashedRelation of the index); the
-   *    stream-static join omits it and leaves micro-batch planning to
-   *    Spark.
-   *  - `checkpointCensus`: a stream materializes the space-bounded
-   *    census ONCE at stream construction (eager localCheckpoint — the
-   *    executor-loss caveat documented at the stream call site) so it is
-   *    not recomputed per micro-batch; batch recomputes it inside the
-   *    one-shot job.
-   *
-   * Slices the new side per band, then joins index rows: plain (sl, sv)
-   * equi-join for an uncapped index, or broadcast-census → explode ≤ m →
-   * (sl, sv, graft_u) block join for a cap-split [[hammingIndex]].
-   * Returns one row per colliding (new, old, slice): (`idCol`, graft_h1,
-   * sl, sv, d_old, graft_h2) — the batch caller dedups pairs and drops
-   * slices; the stream caller verifies in-stream and keeps them.
-   */
-  private[graft] def hammingCandidateJoin(newSide: DataFrame, idCol: String,
-                                          hashCol: String,
-                                          indexSlices: DataFrame,
-                                          bits: Int, bands: Int,
-                                          indexHint: Option[String],
-                                          checkpointCensus: Boolean)
-      : DataFrame = {
-    val nb = hammingSliceRows(newSide, idCol, hashCol, bits, bands)
-      .select(col(idCol), col(hashCol).as("graft_h1"),
-        col("sl"), col("sv"))
-    def hinted(df: DataFrame): DataFrame = indexHint.fold(df)(df.hint(_))
-    if (!indexSlices.columns.contains("graft_m"))
-      nb.join(hinted(indexSlices.select(col(idCol).as("d_old"),
-        col(hashCol).as("graft_h2"), col("sl"), col("sv"))),
-        Seq("sl", "sv"))
-    else {
-      val census0 = indexSlices
-        .select(col("sl"), col("sv"), col("graft_m")).distinct()
-      val census =
-        if (checkpointCensus) census0.localCheckpoint(eager = true)
-        else census0
-      nb.join(broadcast(census), Seq("sl", "sv"))
-        .withColumn("graft_u",
-          explode(sequence(lit(0L), col("graft_m") - 1)))
-        .join(hinted(indexSlices.select(col(idCol).as("d_old"),
-            col(hashCol).as("graft_h2"), col("sl"), col("sv"),
-            col("graft_u"))),
-          Seq("sl", "sv", "graft_u"))
-    }
   }
 
   /**
@@ -1364,18 +1149,14 @@ object TextDedup {
     * doc's set size off the collision rows themselves — no per-batch
     * corpus-sized aggregation, no second pass over the candidate join.
     *
-    * `maxBucket` pre-splits hot index band buckets AT BUILD TIME (the
-    * q358 salt-split carried to the incremental path): each band row
-    * gains its sub-bucket id `graft_u` = (rank-of-id − 1) mod m and the
-    * bucket's split count `graft_m` = ⌈B/cap⌉, so every (band, bh,
-    * graft_u) key holds ≤ cap index rows. The index a 100 TB corpus
-    * stores is exactly the table whose hot buckets are the
-    * most-duplicated content — pre-splitting once at build time bounds
-    * EVERY future batch's collision-join cells (see
-    * [[dedupAgainstIndex]] for the query-side block join and its
-    * losslessness argument; q362 hash-proves it against the uncapped
-    * q64 oracle). The window cost is one (band, bh) pass at build,
-    * amortized like `n_old`. */
+    * `maxBucket` pre-splits hot index band buckets AT BUILD TIME
+    * ([[Buckets.splitIndex]]), so every (band, bh, graft_u) key holds
+    * ≤ cap index rows. The index a 100 TB corpus stores is exactly the
+    * table whose hot buckets are the most-duplicated content —
+    * pre-splitting once at build time bounds EVERY future batch's
+    * collision-join cells (q362 hash-proves the probe lossless against
+    * the uncapped q64 oracle). The window cost is one (band, bh) pass at
+    * build, amortized like `n_old`. */
   def lshIndex(docs: DataFrame, idCol: String, textCol: String,
                k: Int = 16, r: Int = 4, w: Int = 3,
                maxBucket: Option[Long] = None): (DataFrame, DataFrame) = {
@@ -1383,22 +1164,8 @@ object TextDedup {
     val withN = sh.withColumn("n_old", count(lit(1)).over(
       org.apache.spark.sql.expressions.Window.partitionBy(col(idCol))))
     val bands = bandsPerRow(docs, idCol, textCol, k, r, w)
-    val ib = maxBucket match {
-      case None => bands
-      case Some(cap) =>
-        require(cap >= 1, s"maxBucket=$cap must be >= 1")
-        val wspec = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("band"), col("bh"))
-        bands
-          .withColumn("graft_m",
-            call_function("div",
-              count(lit(1)).over(wspec) + lit(cap) - 1, lit(cap))
-              .cast(LongType))
-          .withColumn("graft_u",
-            (row_number().over(wspec.orderBy(col(idCol))) - 1)
-              .cast(LongType) % col("graft_m"))
-    }
-    (ib, withN)
+    (maxBucket.fold(bands)(Buckets.splitIndex(bands, idCol, Buckets.TextBands, _)),
+      withN)
   }
 
   /**
@@ -1412,41 +1179,21 @@ object TextDedup {
    * O(|batch| + collisions), not a full-corpus self-join. Signatures are
    * per-document (K–M md5), so incremental results are bit-identical to
    * what a batch-global run would report for the same (new, old) pairs.
+   * The collision join is [[Buckets.probeIndex]]: a cap-split
+   * [[lshIndex]] gives the IDENTICAL candidate set (q362's oracle is the
+   * uncapped q64 chain), each join cell bounded by cap × |batch bucket|
+   * (the batch side is micro-batch-bounded by the operator's contract).
    */
   def dedupAgainstIndex(newDocs: DataFrame, idCol: String, textCol: String,
                         indexBands: DataFrame, indexShingles: DataFrame,
                         k: Int = 16, r: Int = 4, w: Int = 3,
                         threshold: Double = 0.5): DataFrame = {
     val nsh = shingles(newDocs, idCol, textCol, w)
-    val nb = bandsPerRow(newDocs, idCol, textCol, k, r, w)
-      .select(col(idCol).as("d_new"), col("band"), col("bh"))
-    // A [[lshIndex]] built with maxBucket carries (graft_u, graft_m):
-    // the collision join then runs as the q358 block decomposition —
-    // each new band row first picks up the bucket's m from the 1-row-
-    // per-bucket census (a join with NO fan-out: exactly one census row
-    // per key), explodes over the m sub-buckets, and meets the index on
-    // (band, bh, graft_u), where the index side holds ≤ cap rows by
-    // build-time construction. Every colliding (new, old) pair meets
-    // exactly once per shared band (the old row has ONE graft_u; the
-    // new row covers all of them), so the candidate set is IDENTICAL
-    // to the uncapped join's — q362's oracle is the uncapped q64 chain,
-    // hash-green = losslessness. Cell bound: cap × |batch bucket| —
-    // the batch side is micro-batch-bounded by the operator's contract
-    // (the corpus-scale side is the index, and that is the split one).
-    val cand = (if (!indexBands.columns.contains("graft_m")) {
-      nb.join(indexBands
-          .select(col(idCol).as("d_old"), col("band"), col("bh"))
-          .hint("shuffle_hash"), Seq("band", "bh"))
-    } else {
-      val census = indexBands.select(col("band"), col("bh"), col("graft_m"))
-        .distinct()
-      nb.join(census.hint("shuffle_hash"), Seq("band", "bh"))
-        .withColumn("graft_u",
-          explode(sequence(lit(0L), col("graft_m") - 1)))
-        .join(indexBands.select(col(idCol).as("d_old"), col("band"),
-            col("bh"), col("graft_u")).hint("shuffle_hash"),
-          Seq("band", "bh", "graft_u"))
-    }).select("d_new", "d_old").distinct()
+    val cand = Buckets.probeIndex(
+        bandsPerRow(newDocs, idCol, textCol, k, r, w)
+          .select(col(idCol).as("d_new"), col("band"), col("bh")),
+        indexBands, Buckets.TextBands, col(idCol).as("d_old"))
+      .select("d_new", "d_old").distinct()
     // Old-doc set sizes: read off the index's precomputed `n_old` column
     // when present (lshIndex stores it at build time) — the size lookup
     // then rides the collision join itself: no per-batch corpus

@@ -6,8 +6,9 @@ import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
-  FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem,
+  FSDataInputStream, FileStatus, FsConstants, FsServerDefaults,
+  LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -83,9 +84,18 @@ class GraftLocalFileSystem extends LocalFileSystem(new InProcessRawLocalFileSyst
 /** `fs.AbstractFileSystem.file.impl`, used by FileContext (Spark's
   * streaming checkpoint manager: offsets, commits, state store): Hadoop's
   * `LocalFs`, a `ChecksumFs` over `RawLocalFs`, over
-  * [[InProcessRawLocalFileSystem]] instead. */
+  * [[InProcessRawLocalFileSystem]] instead.
+  *
+  * One intended difference from the stock `LocalFs`: `open(path)` verifies
+  * the `.crc` sidecar. Stock `FileContext.open(path)`, which Spark's
+  * checkpoint manager calls, reaches `FilterFs.open(path)` and reads the
+  * raw file unchecked, so a torn offset, commit or state-store file would
+  * be read as data; only `open(path, bufferSize)` is checksummed. */
 class GraftLocalFs(uri: URI, conf: Configuration)
-    extends ChecksumFs(new GraftLocalFs.Raw(uri, conf))
+    extends ChecksumFs(new GraftLocalFs.Raw(uri, conf)) {
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 object GraftLocalFs {
 

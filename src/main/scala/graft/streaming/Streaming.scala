@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import graft.etl.BronzeToSilver
+import graft.operators.{Buckets, Similarity, TextDedup}
 import graft.model.Schemas
 
 /**
@@ -70,8 +71,11 @@ object Streaming {
    * Streaming incremental near-dup detection: the stream-side half of
    * `TextDedup.dedupAgainstIndex` — incoming documents are banded by
    * `TextDedup.bandsPerRow`, the band path every text LSH operator shares,
-   * and stream-static joined against the stored index bands.
-   * Emits (idCol, band, bh, d_old), one row per band collision.
+   * and stream-static joined against the stored index bands by
+   * [[graft.operators.Buckets.probeIndex]] — the batch operator's probe,
+   * in its stream mode (a cap-split index's census is materialized once
+   * when the stream is built; see the executor-loss caveat there).
+   * Emits (band, bh, idCol, d_old), one row per band collision.
    *
    * Collisions are CANDIDATES: a doc colliding with `d_old` in several
    * bands appears several times (a streaming distinct would need state;
@@ -85,41 +89,10 @@ object Streaming {
    */
   def nearDupCandidates(docStream: DataFrame, idCol: String, textCol: String,
                         indexBands: DataFrame, k: Int = 16, r: Int = 4,
-                        w: Int = 3): DataFrame = {
-    val sb = graft.operators.TextDedup
-      .bandsPerRow(docStream, idCol, textCol, k, r, w)
-    // a cap-split index (lshIndex(maxBucket) — carries graft_u/graft_m)
-    // is exploited transparently with the q362 block join: census (one
-    // row per bucket, no fan-out) → explode ≤ m → (band, bh, u) cells
-    // of ≤ cap index rows; the candidate set is identical (the old row
-    // has ONE u, the arriving row covers all of them)
-    if (!indexBands.columns.contains("graft_m"))
-      sb.join(indexBands
-          .select(col(idCol).as("d_old"), col("band"), col("bh")),
-        Seq("band", "bh"))
-    else {
-      // the census is a corpus-scale distinct over the STATIC index —
-      // localCheckpoint it eagerly at stream construction so every
-      // micro-batch joins the materialized (band, bh, m) rows instead
-      // of re-running the distinct per trigger (r17 ADVICE). Caveat
-      // (r18 ADVICE): localCheckpoint truncates lineage and pins blocks
-      // to executor storage, so in a LONG-RUNNING query an executor
-      // loss makes the blocks unrecoverable and fails the query instead
-      // of recomputing; a deployment that must survive executor churn
-      // should persist(MEMORY_AND_DISK) + count() (keeps lineage) or
-      // read the census from a table refreshed out-of-band.
-      val census = indexBands.select(col("band"), col("bh"), col("graft_m"))
-        .distinct()
-        .localCheckpoint(eager = true)
-      sb.join(census, Seq("band", "bh"))
-        .withColumn("graft_u",
-          explode(sequence(lit(0L), col("graft_m") - 1)))
-        .join(indexBands.select(col(idCol).as("d_old"), col("band"),
-            col("bh"), col("graft_u")),
-          Seq("band", "bh", "graft_u"))
-        .drop("graft_u", "graft_m")
-    }
-  }
+                        w: Int = 3): DataFrame =
+    Buckets.probeIndex(
+      TextDedup.bandsPerRow(docStream, idCol, textCol, k, r, w),
+      indexBands, Buckets.TextBands, col(idCol).as("d_old"))
 
   /**
    * Streaming incremental EMBEDDING near-dup detection: the stream-side
@@ -128,44 +101,22 @@ object Streaming {
    * ([[graft.operators.Similarity.lshSignaturesMulti]]: a narrow
    * stateless projection, no stateful aggregation) and stream-static
    * joined against the stored [[graft.operators.Similarity.annIndex]]
-   * signature table. Emits (idCol, tbl, sig, d_old) — one row per table
-   * collision; exact-cosine verification belongs to the downstream
-   * micro-batch (`foreachBatch` running `dedupAgainstAnnIndex` on the
-   * flagged ids), which pays O(collisions), not O(stream).
-   *
-   * A cap-split index (annIndex(maxBucket) — carries graft_u/graft_m)
-   * is exploited transparently with the q362/q375 block join. Unlike
-   * the text path, the census here is METADATA by construction
-   * (≤ nTables·2^planesPerTable occupied buckets), so it is
-   * materialized ONCE at stream construction (eager localCheckpoint —
-   * the r17 ADVICE lesson) and broadcast per micro-batch. Caveat (r18
-   * ADVICE): localCheckpoint pins the materialized blocks to executor
-   * storage with lineage truncated — in a long-running query an
-   * executor loss makes them unrecoverable and fails the query rather
-   * than recomputing; a churn-tolerant deployment should
-   * persist(MEMORY_AND_DISK) + count() (keeps lineage) instead.
+   * signature table by [[graft.operators.Buckets.probeIndex]]. Emits
+   * (tbl, sig, idCol, d_old) — one row per table collision; exact-cosine
+   * verification belongs to the downstream micro-batch (`foreachBatch`
+   * running `dedupAgainstAnnIndex` on the flagged ids), which pays
+   * O(collisions), not O(stream). A cap-split index's census is
+   * metadata (≤ nTables·2^planesPerTable buckets), materialized once
+   * when the stream is built and broadcast per micro-batch.
    */
   def nearDupEmbCandidates(vecStream: DataFrame, idCol: String,
                            vecCol: String, indexSigs: DataFrame,
                            nTables: Int = 4, planesPerTable: Int = 4,
-                           dims: Int = 64): DataFrame = {
-    val sb = graft.operators.Similarity.lshSignaturesMulti(vecStream,
-      idCol, vecCol, nTables, planesPerTable, dims)
-    if (!indexSigs.columns.contains("graft_m"))
-      sb.join(indexSigs.select(col(idCol).as("d_old"), col("tbl"),
-        col("sig")), Seq("tbl", "sig"))
-    else {
-      val census = indexSigs.select(col("tbl"), col("sig"), col("graft_m"))
-        .distinct()
-        .localCheckpoint(eager = true)
-      sb.join(broadcast(census), Seq("tbl", "sig"))
-        .withColumn("graft_u",
-          explode(sequence(lit(0L), col("graft_m") - 1)))
-        .join(indexSigs.select(col(idCol).as("d_old"), col("tbl"),
-            col("sig"), col("graft_u")), Seq("tbl", "sig", "graft_u"))
-        .drop("graft_u", "graft_m")
-    }
-  }
+                           dims: Int = 64): DataFrame =
+    Buckets.probeIndex(
+      Similarity.lshSignaturesMulti(vecStream, idCol, vecCol, nTables,
+        planesPerTable, dims),
+      indexSigs, Buckets.VectorTables, col(idCol).as("d_old"))
 
   /**
    * Streaming incremental HAMMING near-dup detection — the stream-side
@@ -177,23 +128,16 @@ object Streaming {
    * .perceptualHashWide]], a stateless projection that composes
    * directly on a stream (SimHash does NOT: it needs a word-level
    * aggregation, so text simhashes are indexed in batch and arrive
-   * here as columns). Each row is sliced per band (stateless), joined
+   * here as columns). Each row is sliced per band (stateless), probed
    * stream-static against the stored [[graft.operators.TextDedup
-   * .hammingIndex]], and — unlike the text/embedding twins, whose
-   * verification needs a second corpus table — VERIFIED IN-STREAM:
-   * Hamming distance is a pure function of the two hashes riding the
-   * joined row. Emits one row per agreeing under-`maxDist` slice
-   * (idCol, sl, sv, d_old, hamming); a pair agreeing on several slices
-   * emits once per slice — the downstream `foreachBatch` dedups ids,
-   * exactly the other twins' contract.
-   *
-   * A cap-split index (hammingIndex(maxBucket) — graft_u/graft_m) is
-   * exploited transparently: the census is metadata BY THE SPACE
-   * ITSELF (≤ bands · 2^(bits/bands) occupied buckets regardless of
-   * corpus size), materialized once at stream construction (eager
-   * localCheckpoint — see [[nearDupEmbCandidates]]'s executor-loss
-   * caveat) and broadcast per micro-batch, then explode ≤ m → block
-   * join with ≤ cap index rows per cell.
+   * .hammingIndex]] by [[graft.operators.Buckets.probeIndex]] (the
+   * batch operator's probe, in its stream mode), and — unlike the
+   * text/embedding twins, whose verification needs a second corpus
+   * table — VERIFIED IN-STREAM: Hamming distance is a pure function of
+   * the two hashes riding the joined row. Emits one row per agreeing
+   * under-`maxDist` slice (idCol, sl, sv, d_old, hamming); a pair
+   * agreeing on several slices emits once per slice — the downstream
+   * `foreachBatch` dedups ids, exactly the other twins' contract.
    */
   def nearDupHammingCandidates(hashStream: DataFrame, idCol: String,
                                hashCol: String, indexSlices: DataFrame,
@@ -201,20 +145,13 @@ object Streaming {
                                maxDist: Int): DataFrame = {
     require(maxDist <= bands - 1,
       s"pigeonhole recall needs maxDist <= bands-1 (= ${bands - 1})")
-    // the candidate join is the batch operator's, by construction (one
-    // shared builder — r19 ADVICE): the stream differs ONLY in the two
-    // declared knobs — no shuffle_hash hint (stream-static planning) and
-    // a construction-time census checkpoint (the executor-loss caveat in
-    // this scaladoc) — and in verifying in-stream without a pair-level
-    // distinct (downstream foreachBatch dedups ids, the twins' contract)
-    graft.operators.TextDedup
-      .hammingCandidateJoin(hashStream, idCol, hashCol, indexSlices,
-        bits, bands, indexHint = None, checkpointCensus = true)
-      .withColumn("hamming",
-        bit_count(col("graft_h1").bitwiseXOR(col("graft_h2"))))
-      .filter(col("hamming") <= maxDist)
-      .select(col(idCol), col("sl"), col("sv"), col("d_old"),
-        col("hamming"))
+    val cand = Buckets.probeIndex(
+      TextDedup.hammingSliceRows(hashStream, idCol, hashCol, bits, bands)
+        .select(col(idCol), col(hashCol).as("graft_h1"), col("sl"), col("sv")),
+      indexSlices, Buckets.HammingSlices,
+      col(idCol).as("d_old"), col(hashCol).as("graft_h2"))
+    TextDedup.withinHamming(cand, maxDist)
+      .select(col(idCol), col("sl"), col("sv"), col("d_old"), col("hamming"))
   }
 
   /**

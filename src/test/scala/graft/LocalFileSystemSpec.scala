@@ -104,8 +104,9 @@ class LocalFileSystemSpec extends SparkSpec {
         o.write(bytes)
         o.close()
       }
-      // open(path) skips ChecksumFs and reads the raw file; open(path,
-      // bufferSize) is the checksummed read
+      // the checksummed read both classes share. Stock open(path) skips
+      // ChecksumFs and reads the raw file; GraftLocalFs checks it — the one
+      // intended difference, held by the next test
       def fcRead(rel: String): String = {
         val in = fc.open(q(rel), 4096)
         try new String(in.readAllBytes(), "UTF-8") finally in.close()
@@ -162,6 +163,32 @@ class LocalFileSystemSpec extends SparkSpec {
       assert(seen("fc.getFileLinkStatus <root>/fs/dangling").contains("link=true"),
         "the bare dangling symlink was not read as a link")
     }
+  }
+
+  test("FileContext open(path) verifies .crc: the one intended difference from stock LocalFs") {
+    // Spark's checkpoint manager reads offsets, commits and state-store
+    // files through FileContext.open(path); a corrupted byte must fail
+    // that read, not come back as data
+    def corruptRead(graft: Boolean): String = {
+      val root = JPath.of(tmpDir(if (graft) "crc_graft" else "crc_stock"))
+      val fc = FileContext.getFileContext(new URI("file:///"),
+        conf("022", graft))
+      val p = new Path(root.toUri.resolve("f"))
+      val data = Array.tabulate[Byte](1500)(i => (i % 61).toByte)
+      val o = fc.create(p, EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE))
+      o.write(data)
+      o.close()
+      val bytes = Files.readAllBytes(root.resolve("f"))
+      bytes(700) = (bytes(700) ^ 1).toByte
+      Files.write(root.resolve("f"), bytes)
+      try {
+        val in = fc.open(p)
+        try s"read ${in.readAllBytes().length}" finally in.close()
+      } catch { case e: Exception => e.getClass.getName }
+    }
+    assert(corruptRead(graft = false) == "read 1500",
+      "stock LocalFs open(path) no longer reads the raw file")
+    assert(corruptRead(graft = true) == "org.apache.hadoop.fs.ChecksumException")
   }
 
   test("GraftSession wires the in-process file systems for file: paths") {

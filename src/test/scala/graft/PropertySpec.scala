@@ -615,6 +615,104 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("drop-cap pairs and bucket censuses match the uncapped join for ANY corpus and cap") {
+    // the drop-cap contract (q338/q346/q372) as a law, for both families
+    // that drop: a capped run emits exactly the uncapped verified pairs
+    // that share at least one UNDER-cap bucket; the excluded-bucket
+    // report is exactly the census rows above the cap; and Σ bucket_size
+    // is the bucket-row count. The census is recomputed here on the
+    // driver from the collected bucket rows.
+    def law(rows: Seq[(Long, (Long, Long))], cap: Long,
+            uncapped: Set[(Long, Long, Any)], capped: Set[(Long, Long, Any)],
+            excluded: Set[((Long, Long), Long)],
+            census: Seq[Long]): Unit = {
+      val sizes = rows.groupBy(_._2).map { case (k, v) => k -> v.size.toLong }
+      val kept = rows.filter(r => sizes(r._2) <= cap).groupBy(_._1)
+        .map { case (id, v) => id -> v.map(_._2).toSet }
+      def sharesKept(a: Long, b: Long): Boolean =
+        kept.getOrElse(a, Set.empty).exists(kept.getOrElse(b, Set.empty))
+      val expected = uncapped.filter { case (a, b, _) => sharesKept(a, b) }
+      assert(capped == expected, s"cap=$cap: capped ${capped.size} vs " +
+        s"${expected.size} uncapped pairs sharing an under-cap bucket")
+      assert(excluded == sizes.filter(_._2 > cap).toSet, s"cap=$cap")
+      assert(census.sum == rows.size && census.size == sizes.size)
+    }
+    val vec: Gen[(Long, Seq[Float])] = for {
+      id <- Gen.choose(0L, 10000L)
+      family <- Gen.choose(0, 2)
+      jitter <- Gen.choose(0, 9)
+    } yield (id, (0 until 8).map(d =>
+      (if (family == 0) 1.0f else if (family == 1) -1.0f
+       else if (d % 2 == 0) 1.0f else -1.0f) *
+        (1.0f + 0.003f * ((id + jitter + d) % 7))))
+    val vectors: Gen[(List[(Long, Seq[Float])], Long)] = for {
+      n <- Gen.choose(8, 28)
+      vs <- Gen.listOfN(n, vec)
+      cap <- Gen.choose(1L, 6L)
+    } yield (vs, cap)
+    import graft.operators.Similarity
+    forAll(vectors) { case (vs, cap) =>
+      val emb = vs.toMap.toSeq.toDF("vec_id", "embedding")
+      def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Any)] =
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.get(2): Any)).toSet
+      law(
+        Similarity.lshSignaturesMulti(emb, "vec_id", "embedding", 2, 2, 8)
+          .collect().map(r => (r.getLong(0), (r.getInt(1).toLong, r.getLong(2)))),
+        cap,
+        pairs(Similarity.cosineNearDupPairsBucketed(emb, "vec_id",
+          "embedding", 0.8, nTables = 2, planesPerTable = 2, dims = 8)),
+        pairs(Similarity.cosineNearDupPairsBucketedCapped(emb, "vec_id",
+          "embedding", 0.8, maxBucket = cap, nTables = 2,
+          planesPerTable = 2, dims = 8)),
+        Similarity.lshExcludedBuckets(emb, "vec_id", "embedding", cap,
+            nTables = 2, planesPerTable = 2, dims = 8)
+          .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2)))
+          .toSet,
+        Similarity.lshBucketSizes(emb, "vec_id", "embedding",
+            nTables = 2, planesPerTable = 2, dims = 8)
+          .collect().map(_.getLong(2)).toSeq)
+    }
+    val center = Vector(0x0F0FL, 0xF0F0L, 0x3C3CL)
+    val hash: Gen[Long] = for {
+      c <- Gen.choose(0, 2)
+      flip <- Gen.choose(0, 16)
+    } yield if (flip > 15) center(c) else center(c) ^ (1L << flip)
+    val hashes: Gen[(List[Long], Long)] = for {
+      n <- Gen.choose(6, 18)
+      hs <- Gen.listOfN(n, hash)
+      cap <- Gen.choose(1L, 5L)
+    } yield (hs, cap)
+    forAll(hashes) { case (hs, cap) =>
+      val df = hs.zipWithIndex.map { case (h, i) => (i.toLong, h) }
+        .toDF("doc_id", "h")
+      def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Any)] =
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.get(2): Any)).toSet
+      law(
+        TextDedup.hammingSliceRows(df, "doc_id", "h", 16, 4).collect()
+          .map(r => (r.getLong(0), (r.getInt(2).toLong, r.getLong(3)))),
+        cap,
+        pairs(TextDedup.hammingPairs(df, "doc_id", "h",
+          bits = 16, bands = 4, maxDist = 3)),
+        pairs(TextDedup.hammingPairsDropCap(df, "doc_id", "h",
+          bits = 16, bands = 4, maxDist = 3, maxBucket = cap)),
+        TextDedup.hammingExcludedBuckets(df, "doc_id", "h", 16, 4, cap)
+          .collect().map(r =>
+            ((r.getInt(0).toLong, r.getLong(1)), r.getLong(2))).toSet,
+        TextDedup.hammingBucketSizes(df, "doc_id", "h", 16, 4)
+          .collect().map(_.getLong(2)).toSeq)
+    }
+    // the text census has no drop-cap twin; its sum law still holds
+    val docs = Seq("the quick brown fox jumps over the lazy dog",
+        "the quick brown fox jumps over the lazy dog",
+        "spark shuffles hash joins across the cluster tonight", "short")
+      .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val textCensus = TextDedup.lshBandBucketSizes(docs, "doc_id", "text")
+      .collect().map(_.getLong(2))
+    assert(textCensus.sum ==
+      TextDedup.bandsPerRow(docs, "doc_id", "text").count())
+    assert(textCensus.max == 2L, "the two identical docs share every band")
+  }
+
   test("cluster-keyed split admits zero crossing near-dup pairs for ANY corpus") {
     // q351's structural guarantee as a law: whatever the near-dup pair
     // graph looks like, a hash split keyed on the connected-component

@@ -767,6 +767,85 @@ class StreamingSpec extends SparkSpec {
     assert(got === expected)
   }
 
+  test("the three nearDup*Candidates streams ≡ the batch probe over the union of 3 micro-batches") {
+    // stream ≡ batch for each family's stored-index probe: the new side
+    // arrives as 3 files read one per trigger, against an uncapped and a
+    // cap-split index; the distinct (id, d_old) set the stream emits must
+    // equal the batch probe's over the union of the files
+    import org.apache.spark.sql.DataFrame
+    import graft.operators.{Buckets, Similarity, TextDedup}
+    val sf = "/root/testdata/sf0.001"
+    /** Runs `probe` over `newSide` written as 3 files, one per
+      * micro-batch, and returns the distinct (id, d_old) pairs. */
+    def streamed(name: String, newSide: DataFrame, idCol: String)
+                (probe: DataFrame => DataFrame): Set[(Long, Long)] = {
+      val dir = tmpDir(name)
+      (0 until 3).foreach(i => newSide.filter(pmod(col(idCol), lit(3)) === i)
+        .coalesce(1).write.parquet(s"$dir/b$i"))
+      val q = probe(spark.readStream.schema(newSide.schema)
+          .option("maxFilesPerTrigger", "1").parquet(s"$dir/*/"))
+        .select(col(idCol), col("d_old"))
+        .writeStream.format("memory").queryName(name)
+        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      assert(q.recentProgress.count(_.numInputRows > 0) == 3,
+        s"$name: expected 3 micro-batches")
+      spark.table(name).distinct().collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
+    def pairs(df: DataFrame): Set[(Long, Long)] =
+      df.distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val newDocs = docs.filter(col("doc_id") % 2 === 1)
+    val textIndex = Seq(None, Some(1L)).map(mb => TextDedup.lshIndex(
+      docs.filter(col("doc_id") % 2 === 0), "doc_id", "text",
+      maxBucket = mb)._1.localCheckpoint())
+    val textBatch = textIndex.map(idx => pairs(Buckets.probeIndex(
+        TextDedup.bandsPerRow(newDocs, "doc_id", "text"), idx,
+        Buckets.TextBands, col("doc_id").as("d_old"))
+      .select("doc_id", "d_old")))
+    assert(textBatch.head.nonEmpty && textBatch.distinct.size == 1)
+    textIndex.zipWithIndex.foreach { case (idx, i) =>
+      assert(streamed(s"near_text_$i", newDocs, "doc_id")(
+        Streaming.nearDupCandidates(_, "doc_id", "text", idx)) == textBatch(i))
+    }
+
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val newVecs = emb.filter(col("vec_id") % 2 === 1)
+    val annIndex = Seq(None, Some(1L)).map(mb => Similarity.annIndex(
+      emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding",
+      maxBucket = mb).localCheckpoint())
+    val annBatch = annIndex.map(idx => pairs(Buckets.probeIndex(
+        Similarity.lshSignaturesMulti(newVecs, "vec_id", "embedding", 4, 4, 64),
+        idx, Buckets.VectorTables, col("vec_id").as("d_old"))
+      .select("vec_id", "d_old")))
+    assert(annBatch.head.nonEmpty && annBatch.distinct.size == 1)
+    annIndex.zipWithIndex.foreach { case (idx, i) =>
+      assert(streamed(s"near_emb_$i", newVecs, "vec_id")(
+        Streaming.nearDupEmbCandidates(_, "vec_id", "embedding", idx)) ==
+        annBatch(i))
+    }
+
+    // the Hamming stream verifies in-stream, so its batch twin is the
+    // verified dedupAgainstHammingIndex
+    val hashed = TextDedup.simHashWide(docs, "doc_id", "text", 60)
+      .localCheckpoint()
+    val newHashes = hashed.filter(col("doc_id") % 2 === 1)
+    val hamIndex = Seq(None, Some(1L)).map(mb => TextDedup.hammingIndex(
+      hashed.filter(col("doc_id") % 2 === 0), "doc_id", "simhash",
+      bits = 60, bands = 4, maxBucket = mb).localCheckpoint())
+    val hamBatch = hamIndex.map(idx => pairs(TextDedup
+      .dedupAgainstHammingIndex(newHashes, "doc_id", "simhash", idx,
+        bits = 60, bands = 4, maxDist = 3).select("d_new", "d_old")))
+    assert(hamBatch.head.nonEmpty && hamBatch.distinct.size == 1)
+    hamIndex.zipWithIndex.foreach { case (idx, i) =>
+      assert(streamed(s"near_ham_$i", newHashes, "doc_id")(
+        Streaming.nearDupHammingCandidates(_, "doc_id", "simhash", idx,
+          bits = 60, bands = 4, maxDist = 3)) == hamBatch(i))
+    }
+  }
+
   test("URL claim stream matches batch dedupByUrl ownership in one batch") {
     import spark.implicits._
     val docs = Seq(
