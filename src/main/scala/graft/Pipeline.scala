@@ -29,39 +29,45 @@ final class Pipeline(spark: SparkSession, warehouseDir: String) {
   }
 
   /** Silver→Gold over one cached single-partition per-asset snapshot
-    * ([[GoldAnalytics.latestSnapshot]]): the four analyses, each
-    * dual-written (history append + current overwrite). Gold writes are
-    * exchange-free — their sorts, top-10, the dominance `sum` and the
-    * write run in one task each — so a write is one job, not a
-    * range-sample + shuffle-map + write triple. Each analysis runs once
-    * for its two writes ([[Sinks.writeAnalysis]]), so the full-history
+    * ([[GoldAnalytics.latestSnapshot]]): the four analyses, each written
+    * to its current table and appended to its history. Gold writes are
+    * exchange-free — their sorts, top-10 and the write run in one task
+    * each — so a write is one job, not a range-sample + shuffle-map +
+    * write triple. Each analysis runs once ([[Sinks.writeAnalysis]]): the
+    * history append copies the current table's files, so the full-history
     * scan of `top_gainers_losers` runs once per cycle.
     *
     * Returns the Silver row count, the reference's `count()` log line
     * (3-spark…py:54). It comes from an [[Observation]] on the full-history
     * scan that `top_gainers_losers` runs anyway, not from a separate
-    * action; the fail-fast on a missing table is the read's. Silver is
-    * read with the schema [[BronzeToSilver]] writes, so no footer
-    * schema-inference job runs. */
+    * action; the fail-fast on a missing table is the read's. Likewise the
+    * market-dominance total is observed while the first write builds the
+    * cached snapshot, not summed by a job of its own. Silver is read with
+    * the schema [[BronzeToSilver]] writes, so no footer schema-inference
+    * job runs. */
   def silverToGold(analysisTs: String): Long = {
     val silver = spark.read.schema(BronzeToSilver.schema(spark))
       .parquet(s"$warehouseDir/silver/assats_list")
     val silverRows = Observation("silver_rows")
     val history = silver.observe(silverRows, count(lit(1)).as("rows"))
       .withColumn("data_referencia_dt", col("data_referencia").cast("timestamp"))
-    val latest = GoldAnalytics.latestSnapshot(silver).cache()
+    val snapshot = Observation("snapshot")
+    val latest = GoldAnalytics.latestSnapshot(silver)
+      .observe(snapshot, GoldAnalytics.MarketCapTotal).cache()
 
     def write(df: DataFrame, name: String): Unit =
       Sinks.writeAnalysis(df, gold(name) + "_history", gold(name), name, spark)
 
+    // the first write builds the cached snapshot: `snapshot` is set after it
     write(GoldAnalytics.dailyOverview(latest, analysisTs), "daily_overview")
     write(GoldAnalytics.topGainersLosers(latest, history, analysisTs),
       "top_gainers_losers")
-    GoldAnalytics.marketDominance(latest, analysisTs)
+    val total = snapshot.get("market_cap_total").asInstanceOf[java.lang.Double]
+    GoldAnalytics.marketDominance(latest, total, analysisTs)
       .foreach(write(_, "market_dominance"))   // skip guard: total null/≤0
     write(GoldAnalytics.supplyDynamics(latest, analysisTs), "supply_dynamics")
     latest.unpersist()
-    // the top_gainers_losers writes ran the observed scan: get() is set
+    // the top_gainers_losers write ran the observed scan: get() is set
     silverRows.get("rows").asInstanceOf[Long]
   }
 

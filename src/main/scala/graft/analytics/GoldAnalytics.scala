@@ -85,17 +85,27 @@ object GoldAnalytics {
       .withColumn("data_processamento_analise", auditTs(analysisTs))
   }
 
+  /** Σ market cap over the snapshot, null when every cap is null: the
+    * `market_dominance` denominator. An aggregate column, so it can ride
+    * an [[org.apache.spark.sql.Observation]] on the snapshot's build
+    * ([[graft.Pipeline.silverToGold]]) instead of a job of its own. */
+  val MarketCapTotal: Column = sum("market_cap_usd").as("market_cap_total")
+
   /**
    * Q3 `market_dominance` (3-spark…py:199-232): scalar Σ market cap pulled
    * to the driver (the reference's observable collect() round-trip + null/≤0
    * skip guard), then percent-of-total per asset. Returns None when the
    * guard trips — the reference skips the analysis entirely.
    */
-  def marketDominance(latest: DataFrame, analysisTs: String): Option[DataFrame] = {
-    val total = Option(
-      latest.agg(sum("market_cap_usd")).head.getAs[java.lang.Double](0))
-      .map(_.doubleValue())
-    total.filter(_ > 0).map { t =>
+  def marketDominance(latest: DataFrame, analysisTs: String): Option[DataFrame] =
+    marketDominance(latest,
+      latest.agg(MarketCapTotal).head.getAs[java.lang.Double](0), analysisTs)
+
+  /** Q3 over a [[MarketCapTotal]] of `latest` computed by the caller;
+    * None when `total` is null or ≤ 0 (the skip guard). */
+  def marketDominance(latest: DataFrame, total: java.lang.Double,
+                      analysisTs: String): Option[DataFrame] =
+    Option(total).map(_.doubleValue).filter(_ > 0).map { t =>
       latest.filter(col("market_cap_usd").isNotNull)
         .withColumn("percent_market_cap",
           round(col("market_cap_usd") / stableLiteral(lit(t)) * 100, 4))
@@ -107,7 +117,6 @@ object GoldAnalytics {
         .orderBy(col("percent_market_cap").desc)
         .withColumn("data_processamento_analise", auditTs(analysisTs))
     }
-  }
 
   /** Q4 `supply_dynamics` (3-spark…py:234-266): supply filter, mcap/unit
     * ratio, 3-way CASE on max_supply (exact Portuguese labels — the oracle
@@ -136,14 +145,22 @@ object GoldAnalytics {
    * Q5 dashboard master (5-sql_exportacao_de_dados_dashboard.sql:1-50):
    * 3-way LEFT JOIN of the Gold tables on (symbol, data_referencia), filtered
    * to the latest data_referencia, ordered by rank. The reference filters
-   * with `WHERE overview.data_referencia = (SELECT MAX(...))`; here the
-   * overview joins the one-row MAX instead. The rows are the same (the
-   * filter reads only overview columns, and LEFT JOINs keep every overview
-   * row), but Spark inlines a scalar subquery's result into generated code,
-   * which made every cycle's dashboard compile fresh classes; a join key is
-   * data. Runs over the registered "current" views. The Gold
-   * tables are small (≤ ~100 rows) → Catalyst broadcasts every join side;
-   * the fan-out on non-unique `symbol` is reference behavior, kept as-is.
+   * with `WHERE overview.data_referencia = (SELECT MAX(...))`; here each
+   * overview row carries `MAX(data_referencia) OVER ()` and the filter
+   * compares the two columns. The rows are the same (the filter reads only
+   * overview columns, and LEFT JOINs keep every overview row), but Spark
+   * inlines a scalar subquery's result into generated code, which made
+   * every cycle's dashboard compile fresh classes; a window value is data.
+   *
+   * The overview is read through `COALESCE(1)`: it holds one row per
+   * asset of the latest snapshot (≤ |assets| rows), so one partition is
+   * safe, and a single-partition stream side already satisfies the
+   * window's all-tuples distribution and the `ORDER BY`'s ordering. The
+   * plan has no shuffle: no MAX aggregate exchange, no broadcast of its
+   * one row, no range-sort sample. Runs over the registered "current"
+   * views; the Gold tables are small (≤ ~100 rows) → Catalyst broadcasts
+   * the three LEFT JOIN sides. The fan-out on non-unique `symbol` is
+   * reference behavior, kept as-is.
    */
   val dashboardSql: String =
     """SELECT
@@ -153,9 +170,8 @@ object GoldAnalytics {
       |  overview.max_supply, overview.explorer, overview.data_referencia,
       |  supply.market_cap_per_unit_supply, supply.status_oferta_maxima,
       |  dominance.percent_market_cap, movers.tipo_movimento
-      |FROM daily_overview AS overview
-      |JOIN (SELECT MAX(data_referencia) AS latest_ref FROM daily_overview) AS latest
-      |  ON overview.data_referencia = latest.latest_ref
+      |FROM (SELECT *, MAX(data_referencia) OVER () AS latest_ref
+      |      FROM (SELECT /*+ COALESCE(1) */ * FROM daily_overview)) AS overview
       |LEFT JOIN supply_dynamics AS supply
       |  ON overview.symbol = supply.symbol
       | AND overview.data_referencia = supply.data_referencia
@@ -165,6 +181,7 @@ object GoldAnalytics {
       |LEFT JOIN top_gainers_losers AS movers
       |  ON overview.symbol = movers.symbol
       | AND overview.data_referencia = movers.data_referencia
+      |WHERE overview.data_referencia = overview.latest_ref
       |ORDER BY overview.rank ASC
       |""".stripMargin
 

@@ -95,14 +95,17 @@ private[graft] object Buckets {
   }
 
   /** Adds `graft_m` = ⌈B/cap⌉ and the sub-bucket `graft_u`, so every
-    * (key, graft_u) cell holds ≤ cap rows (see the class doc). */
-  def splitIndex(rows: DataFrame, idCol: String, f: Family,
-                 cap: Long): DataFrame = {
+    * (key, graft_u) cell holds ≤ cap rows (see the class doc). `size`
+    * names a column already holding each row's bucket size B; without
+    * one, B is counted with a window over the key. */
+  def splitIndex(rows: DataFrame, idCol: String, f: Family, cap: Long,
+                 size: Option[String] = None): DataFrame = {
     require(cap >= 1, s"maxBucket=$cap must be >= 1")
     val w = Window.partitionBy(f.keys.map(col): _*)
+    val b = size.fold(count(lit(1)).over(w))(col)
     rows
-      .withColumn("graft_m", call_function("div",
-        count(lit(1)).over(w) + lit(cap) - 1, lit(cap)).cast(LongType))
+      .withColumn("graft_m",
+        call_function("div", b + lit(cap) - 1, lit(cap)).cast(LongType))
       .withColumn("graft_u", (row_number().over(w.orderBy(col(idCol))) - 1)
         .cast(LongType) % col("graft_m"))
   }
@@ -127,8 +130,8 @@ private[graft] object Buckets {
       case Some(cap) =>
         val s = sized(rows, f)
         val cool = s.filter(col("graft_bs") <= cap)
-        val hot = splitIndex(s.filter(col("graft_bs") > cap).drop("graft_bs"),
-          idCol, f, cap)
+        val hot = splitIndex(s.filter(col("graft_bs") > cap), idCol, f, cap,
+          size = Some("graft_bs"))
         val blocks = explode(sequence(lit(0L), col("graft_m") - 1))
         pairs(side(cool, "1"), side(cool, "2"), f.keys)
           .unionByName(pairs(

@@ -1,5 +1,8 @@
 package graft.sources
 
+import java.io.IOException
+import java.util.UUID
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /**
@@ -120,11 +123,53 @@ object Sinks {
   /** S9: one analysis → both sinks. The analysis runs once: its rows are
     * written to the current table, and the history append copies those
     * just-written files (the reference re-runs the whole lineage per
-    * action — SURVEY §4.4 inefficiency #1 — we don't). */
+    * action — SURVEY §4.4 inefficiency #1 — we don't). A Parquet history
+    * gets the files themselves ([[appendFiles]]: no Spark job, no read
+    * back); a Delta history appends the current table through its
+    * transaction log, which only a Delta write can extend. */
   def writeAnalysis(df: DataFrame, historyPath: String, currentPath: String,
                     table: String, spark: SparkSession): Unit = {
     overwriteCurrent(df, currentPath, table, spark)
-    appendHistory(spark.table(table), historyPath)
+    resolveFormat(spark, historyPath) match {
+      case "delta" => appendHistory(spark.table(table), historyPath)
+      case _       => appendFiles(spark, currentPath, historyPath)
+    }
+  }
+
+  /** Appends the data files of the Parquet table at `from` to the Parquet
+    * history at `to`, byte for byte, through the Hadoop `FileSystem` API.
+    * Each copy gets a fresh `part-…-c000` name under one new write id, as
+    * a Spark append names its files. The copies are written into a
+    * `_`-prefixed staging dir, which readers skip, and renamed into `to`
+    * only once all of them are complete, so a reader never sees a partial
+    * file. A checksummed file system writes and renames each copy's
+    * `.crc` sidecar with it; the `_SUCCESS` marker is rewritten as a
+    * Spark append's commit does. */
+  private def appendFiles(spark: SparkSession, from: String,
+                          to: String): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
+    val src = new Path(from)
+    val dst = new Path(to)
+    val srcFs = src.getFileSystem(conf)
+    val fs = dst.getFileSystem(conf)
+    val writeId = UUID.randomUUID().toString
+    val staging = new Path(dst, s"_staging-$writeId")
+    val files = srcFs.listStatus(src).map(_.getPath).filter { p =>
+      !p.getName.startsWith("_") && !p.getName.startsWith(".")
+    }.sortBy(_.getName)
+    try {
+      val staged = files.zipWithIndex.map { case (file, i) =>
+        val ext = file.getName.dropWhile(_ != '.')
+        val copy = new Path(staging, f"part-$i%05d-$writeId-c000$ext")
+        FileUtil.copy(srcFs, file, fs, copy, false, conf)
+        copy
+      }
+      staged.foreach { copy =>
+        if (!fs.rename(copy, new Path(dst, copy.getName)))
+          throw new IOException(s"could not move $copy into $dst")
+      }
+      fs.create(new Path(dst, "_SUCCESS"), true).close()
+    } finally fs.delete(staging, true)
   }
 
   /** Partitioned append — the 100 TB posture for history tables (SURVEY

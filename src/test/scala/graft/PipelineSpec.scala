@@ -96,6 +96,100 @@ class PipelineSpec extends SparkSpec {
     assert(dash == DashboardRows, dash.mkString("\n"))
   }
 
+  test("silver→gold: history is the union of every cycle's current tables, copied file by file") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val landing = tmpDir("landing_law")
+    val warehouse = tmpDir("warehouse_law")
+    val pipeline = silverFromTwoPolls(spark, landing, warehouse)
+    val analyses = Seq("daily_overview", "top_gainers_losers",
+      "market_dominance", "supply_dynamics")
+    def dir(name: String): Path = Paths.get(s"$warehouse/gold/$name")
+    def entries(d: Path): Seq[Path] =
+      if (!Files.isDirectory(d)) Nil
+      else Files.list(d).iterator().asScala.toSeq.sortBy(_.toString)
+    def dataFiles(d: Path): Seq[Path] = entries(d).filter { f =>
+      val n = f.getFileName.toString
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    def bytes(files: Seq[Path]): Seq[String] =
+      files.map(f => java.util.HexFormat.of().formatHex(Files.readAllBytes(f))).sorted
+    def cap(mcap: String)(id: String, rank: Int, symbol: String) =
+      asset(id, rank, symbol, symbol.toLowerCase.capitalize, "\"1000.0\"",
+        "\"2000.0\"", mcap, "\"5.0\"", s"\"$rank.5\"", s"\"-$rank.25\"",
+        "\"1.0\"")
+    // cycle 2 nulls every asset's market cap: market_dominance is skipped
+    val later = Seq(
+      (t1 + 3600000L, "2025-05-24 06:00:00", cap("null") _,
+        Set("market_dominance")),
+      (t1 + 7200000L, "2025-05-24 07:00:00", cap("\"250.0\"") _, Set.empty[String]))
+    var expected = Map.empty[String, Seq[String]].withDefaultValue(Nil)
+    def cycle(ts: String, skipped: Set[String]): Unit = {
+      val before = analyses.map(n => n -> dataFiles(dir(s"${n}_history"))).toMap
+      pipeline.silverToGold(ts)
+      for (name <- analyses) {
+        val added = dataFiles(dir(s"${name}_history")).diff(before(name))
+        if (skipped(name)) assert(added.isEmpty, s"$name was not skipped")
+        else {
+          expected += name -> (expected(name) ++
+            rows(spark.read.parquet(dir(name).toString)))
+          // each copy holds the current file's bytes and has its .crc
+          assert(bytes(added) == bytes(dataFiles(dir(name))), s"$name copies")
+          added.foreach { f =>
+            assert(Files.exists(f.resolveSibling(s".${f.getFileName}.crc")),
+              s"$f has no .crc")
+          }
+        }
+        assert(!entries(dir(s"${name}_history")).exists(Files.isDirectory(_)),
+          s"$name history holds a leftover dir")
+      }
+    }
+    cycle("2025-05-24 05:00:00", Set.empty)
+    for ((t, ts, mk, skipped) <- later) {
+      Landing.injectPoll(landing, poll(t, Seq(mk("bitcoin", 1, "BTC"),
+        mk("ethereum", 2, "ETH"), mk("capped", 3, "CAP"),
+        mk("nully", 4, "NUL"))), t)
+      pipeline.bronzeToSilver(landing, ts)
+      cycle(ts, skipped)
+    }
+    for (name <- analyses) {
+      val history = Sinks.readHistory(spark, dir(s"${name}_history").toString)
+      assert(rows(history) == expected(name).sorted, s"$name history")
+    }
+    assert(expected("market_dominance").size == 3 + 4 &&
+      expected("daily_overview").size == 3 * 4)
+    // the layout a Spark append leaves: data files, .crc sidecars, _SUCCESS
+    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+    val listing = Files.walk(Paths.get(warehouse)).iterator().asScala
+      .filter(Files.isRegularFile(_))
+      .map(f => Paths.get(warehouse).relativize(f).toString.replaceAll(uuid, "<uuid>"))
+      .toSeq.sorted
+    assert(listing == HistoryLawListing, listing.mkString("\n"))
+    // a staging dir left by an interrupted append is invisible to readers
+    val hist = dir("daily_overview_history")
+    val staged = hist.resolve("_staging-interrupted")
+    Files.createDirectories(staged)
+    Files.copy(dataFiles(hist).head, staged.resolve(dataFiles(hist).head.getFileName))
+    assert(Sinks.readHistory(spark, hist.toString).count() == 3 * 4)
+  }
+
+  test("dashboard: the windowed latest-date filter returns the joined MAX's rows on a stale asset") {
+    val warehouse = tmpDir("warehouse_stale")
+    silverFromTwoPolls(spark, tmpDir("landing_stale"), warehouse)
+      .silverToGold("2025-05-24 05:00:00")
+    // cap and nully are missing from the later poll: the overview holds
+    // both poll dates, and only the later one reaches the dashboard
+    assert(spark.table("daily_overview").select("data_referencia")
+      .distinct().count() == 2)
+    def rows(sql: String): Seq[String] =
+      spark.sql(sql).collect().map(_.toString).toSeq.sorted
+    val got = rows(graft.analytics.GoldAnalytics.dashboardSql)
+    assert(got.size == DashboardRows.size)
+    assert(got == rows(JoinedMaxDashboardSql))
+  }
+
   test("silver→gold: Silver read with the written schema; a missing table fails fast") {
     val warehouse = tmpDir("warehouse_schema")
     val pipeline = silverFromTwoPolls(spark, tmpDir("landing_schema"), warehouse)
@@ -234,6 +328,48 @@ object PipelineSpec {
     "[ethereum,Ethereum,ETH,2,2540.0,3.06E11,9.0147155905E9,-0.7,2539.8," +
       "1.20716918E8,null,https://x/ethereum,2025-05-24 04:08:49," +
       "2534.85597824,Não Definido,12.4593,Perdedor]")
+
+  /** The dashboard SQL as it read while it joined the one-row MAX: the
+    * equivalence reference for the windowed filter. */
+  val JoinedMaxDashboardSql: String =
+    """SELECT
+      |  overview.id, overview.name, overview.symbol, overview.rank,
+      |  overview.price_usd, overview.market_cap_usd, overview.volume_usd_24hr,
+      |  overview.change_percent_24hr, overview.vwap_24hr, overview.supply,
+      |  overview.max_supply, overview.explorer, overview.data_referencia,
+      |  supply.market_cap_per_unit_supply, supply.status_oferta_maxima,
+      |  dominance.percent_market_cap, movers.tipo_movimento
+      |FROM daily_overview AS overview
+      |JOIN (SELECT MAX(data_referencia) AS latest_ref FROM daily_overview) AS latest
+      |  ON overview.data_referencia = latest.latest_ref
+      |LEFT JOIN supply_dynamics AS supply
+      |  ON overview.symbol = supply.symbol
+      | AND overview.data_referencia = supply.data_referencia
+      |LEFT JOIN market_dominance AS dominance
+      |  ON overview.symbol = dominance.symbol
+      | AND overview.data_referencia = dominance.data_referencia
+      |LEFT JOIN top_gainers_losers AS movers
+      |  ON overview.symbol = movers.symbol
+      | AND overview.data_referencia = movers.data_referencia
+      |ORDER BY overview.rank ASC
+      |""".stripMargin
+
+  /** The warehouse after the three cycles of the history-law test, UUIDs
+    * blanked: what Spark appends left when they wrote every history. Each
+    * table dir holds `_SUCCESS`, its data files and a `.crc` per file;
+    * a history gets one file per cycle (market_dominance skips one). */
+  val HistoryLawListing: Seq[String] = {
+    val part = "part-00000-<uuid>-c000.snappy.parquet"
+    def table(dir: String, parts: Seq[String]): Seq[String] =
+      Seq(s"$dir/._SUCCESS.crc", s"$dir/_SUCCESS") ++
+        parts.flatMap(p => Seq(s"$dir/$p", s"$dir/.$p.crc"))
+    (Seq("daily_overview", "top_gainers_losers", "market_dominance",
+        "supply_dynamics").flatMap { n =>
+      table(s"gold/$n", Seq(part)) ++ table(s"gold/${n}_history",
+        Seq.fill(if (n == "market_dominance") 2 else 3)(part))
+    } ++ table("silver/assats_list",
+      Seq.fill(3)(part) :+ "part-00001-<uuid>-c000.snappy.parquet")).sorted
+  }
 
   /** Lands both polls in `landing` and runs Bronze→Silver into `warehouse`. */
   def silverFromTwoPolls(spark: org.apache.spark.sql.SparkSession,

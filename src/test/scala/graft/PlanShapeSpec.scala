@@ -485,6 +485,31 @@ class PlanShapeSpec extends SparkSpec {
       s"index join must be shuffled, not broadcast:\n${plan.take(3000)}")
   }
 
+  test("text salt split counts each bucket once: no count window over a count window on the same key") {
+    // sized() counts each (band, bh) bucket with a window; the split of
+    // the hot rows reuses that size instead of counting them again
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Count
+    import org.apache.spark.sql.execution.window.WindowExec
+    import graft.queries.ScalePathQueries
+    def counting(w: WindowExec): Boolean =
+      w.windowExpression.exists(_.exists(_.isInstanceOf[Count]))
+    def key(w: WindowExec) = w.partitionSpec.map(_.canonicalized).toSet
+    for ((name, df) <- Seq(
+        "q358" -> ScalePathQueries.q358SaltSplitText(spark, sf),
+        "q385" -> ScalePathQueries.q385PilePrescribed(spark, sf))) {
+      val plan = df.queryExecution.sparkPlan
+      val counts = plan.collect { case w: WindowExec if counting(w) => w }
+      assert(counts.nonEmpty, s"$name sizes no bucket with a window:\n$plan")
+      counts.foreach { w =>
+        val recount = w.child.collect {
+          case c: WindowExec if counting(c) && key(c) == key(w) => c
+        }
+        assert(recount.isEmpty,
+          s"$name counts ${w.partitionSpec} twice:\n$plan")
+      }
+    }
+  }
+
   test("whole-surface audit: no unintended nested-loop/cartesian joins") {
     // Every BroadcastNestedLoopJoin in the surface is a deliberate
     // broadcast of a metadata-scale table (k centroids / 1-row total) or
@@ -1360,22 +1385,55 @@ class PlanShapeSpec extends SparkSpec {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val (jobs, byTable) = recordSilverToGold("plan_gold")
     info(s"silverToGold ran $jobs jobs")
-    val pinned = Seq("daily_overview", "market_dominance", "supply_dynamics")
-      .flatMap(n => Seq(n, s"${n}_history"))
-    assert(byTable.map(_._1).toSet == (pinned.toSet ++
-      Set("top_gainers_losers", "top_gainers_losers_history")),
+    // the history appends copy files: the Spark writes are the four
+    // current tables, one each
+    assert(byTable.map(_._1).sorted == Seq("daily_overview",
+      "market_dominance", "supply_dynamics", "top_gainers_losers"),
       s"unexpected write targets: ${byTable.map(_._1)}")
-    byTable.filter(w => pinned.contains(w._1)).foreach { case (table, plan) =>
+    byTable.foreach { case (table, plan) =>
       assert(!planNodes(plan).exists(_.isInstanceOf[ShuffleExchangeExec]),
-        s"$table write shuffles over the single-partition snapshot:\n$plan")
+        s"$table write shuffles:\n$plan")
     }
-    // 12 measured on this fixture, 31 before the single-partition
-    // snapshot (a Gold write is one job, not sample + shuffle-map +
-    // write) and 13 while Silver was read by footer inference
-    assert(jobs <= 12, s"silverToGold ran $jobs jobs")
+    // 7 measured on this fixture: 12 while each history append was a
+    // Spark write and the dominance total a job of its own, 31 before
+    // the single-partition snapshot
+    assert(jobs <= 7, s"silverToGold ran $jobs jobs")
   }
 
-  test("silver→gold: the two top_gainers_losers writes scan Silver once") {
+  test("silver→gold: a history append starts no job and no SQL execution") {
+    import java.util.concurrent.ConcurrentHashMap
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import graft.sources.Sinks
+    val executions = new ConcurrentHashMap[String, Integer]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          x.jobTags.foreach(t => executions.merge(t, 1, Integer.sum(_, _)))
+        case _ =>
+      }
+    }
+    val df = Seq((1, "a"), (2, "b")).toDF("k", "v")
+    val dir = tmpDir("plan_append")
+    // (jobs, SQL executions) of `body`; countJobs waits out the bus
+    def measured(tag: String)(body: => Unit): (Int, Int) = {
+      val (jobs, _) = countJobs(tag)(body)
+      (jobs, executions.getOrDefault(tag, 0).intValue)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (current, both) = try {
+      (measured("plan-append-current")(
+         Sinks.overwriteCurrent(df, s"$dir/current", "plan_append", spark)),
+       measured("plan-append-both")(Sinks.writeAnalysis(df,
+         s"$dir/history", s"$dir/current", "plan_append", spark)))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(current._1 >= 1 && current._2 >= 1, s"nothing measured: $current")
+    assert(both == current,
+      s"(jobs, SQL executions): current write $current, with history $both")
+    assert(spark.read.parquet(s"$dir/history").count() == 2)
+  }
+
+  test("silver→gold: the top_gainers_losers write scans Silver once") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     val (_, byTable) = recordSilverToGold("plan_movers")
     // the cached snapshot is a leaf here: only the losers branch's
@@ -1386,9 +1444,30 @@ class PlanShapeSpec extends SparkSpec {
           s.relation.location.rootPaths.exists(_.toString.contains("/silver/"))
         case _ => false
       } }
-    assert(scans.size == 2, s"writes: ${byTable.map(_._1)}")
-    // 2 when each write ran the analysis: one full-history scan per write
-    assert(scans.map(_._2).sum == 1, s"Silver scans per write: $scans")
+    assert(scans.map(_._1) == Seq("top_gainers_losers"),
+      s"writes: ${byTable.map(_._1)}")
+    assert(scans.head._2 == 1, s"Silver scans: $scans")
+  }
+
+  test("dashboard: no shuffle, three broadcast joins, at most four jobs") {
+    import org.apache.spark.sql.execution.exchange.{
+      BroadcastExchangeExec, ShuffleExchangeExec}
+    val warehouse = tmpDir("plan_dash")
+    PipelineSpec.silverFromTwoPolls(spark, tmpDir("plan_dash_in"), warehouse)
+      .silverToGold("2025-05-24 05:00:00")
+    val dash = graft.analytics.GoldAnalytics.dashboard(spark)
+    val (jobs, rows) = countJobs("plan-dash")(dash.collect())
+    assert(rows.length == PipelineSpec.DashboardRows.size)
+    val plan = dash.queryExecution.executedPlan
+    val nodes = planNodes(plan)
+    assert(!nodes.exists(_.isInstanceOf[ShuffleExchangeExec]),
+      s"the dashboard shuffles:\n$plan")
+    assert(nodes.count(_.isInstanceOf[BroadcastExchangeExec]) == 3,
+      s"want one broadcast per LEFT JOIN side:\n$plan")
+    // 8 while the latest date came from a joined one-row MAX: its
+    // shuffle, its broadcast and the range sort's sample and map jobs
+    info(s"dashboard ran $jobs jobs")
+    assert(jobs <= 4, s"the dashboard ran $jobs jobs")
   }
 
   test("stable_literal: plans that differ only in the value share generated code") {
